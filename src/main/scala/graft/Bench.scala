@@ -471,7 +471,7 @@ object Bench {
           val c304 = Dedup.sparseCosineCandidates(vecs).count()
           val o304 = Dedup.sparseCosinePairs(vecs, 300).count()
           spark.catalog.clearCache()
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+          val docs = Engine.table(spark, sfDir, "documents")
             .select(col("doc_id"),
               array_distinct(graft.functions.TextFns.tokens(col("text"))).as("tk"))
           val (cand222, handles) = Dedup.ppJoinCandidates(
@@ -632,7 +632,7 @@ object Bench {
     //  - DIRTY: unsalted variants, template clusters intact. The right
     //    substrate for showing the exact inverted-index op's sum(df^2)
     //    cost model blowing up on df-heavy data.
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val docs0 = Engine.table(spark, sfDir, "documents").select("doc_id", "text")
     val salted = concat_ws(" ",
       transform(split(col("text"), "\\s+"), (t, i) =>
         when(pmod(i, lit(2)) === 0, concat(lit("d"), col("doc_id"), lit("_"), t)).otherwise(t)))
@@ -668,7 +668,7 @@ object Bench {
     // the select that re-aliases vec_id, so noise seeds use the BASE id
     // (variants 0-3 stay a fixed near-dup clique regardless of resolver
     // behavior)
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    val emb0 = Engine.table(spark, sfDir, "embeddings").select("vec_id", "embedding")
     emb0.withColumn("variant", explode(sequence(lit(0), lit(VE - 1))))
       .withColumn("vvec",
         when(col("variant") < 4,

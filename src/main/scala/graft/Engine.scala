@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session facade — the Spark-native equivalent of the reference's
   * session context (`/root/reference/src/main.rs:379-386`, registered as
@@ -58,10 +64,14 @@ object Engine {
   /** Capability superset: Parquet source (the reference compiles parquet
     * support in but never registers a reader — `/root/reference/Cargo.lock:2286-2288`).
     * Parquet is the scale path: columnar, predicate/projection pushdown,
-    * partition pruning all reach the scan.
+    * partition pruning all reach the scan. A single file is read with the
+    * schema from [[parquetSchema]], so a repeated read of the same file
+    * plans without a schema-inference job; a directory or a path that
+    * cannot be stat'ed is a plain read. The frame is built fresh on every
+    * call.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    cachedParquet(spark, path).fold(identity, s => spark.read.schema(s).parquet(path))
 
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
@@ -84,9 +94,60 @@ object Engine {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** Driver-testdata helper: one parquet file per table under `dir`. */
+  /** Testdata reader: one parquet file per table under `dir`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** Schema of the parquet data at `path`, inferred once per parquet FILE.
+    * The lookup is keyed on the file's identity (qualified path, length,
+    * modification time) plus the session's conf entries that parquet
+    * inference reads, so a rewritten file or a session that infers
+    * differently (`binaryAsString`, timestamp inference, case
+    * sensitivity) infers afresh. A directory is never cached: its files
+    * change without its own status saying so. A path that cannot be
+    * stat'ed goes to the plain read, which raises Spark's own error.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    cachedParquet(spark, path).fold(_.schema, identity)
+
+  private final case class SchemaKey(path: String, length: Long, mtime: Long,
+      confs: Seq[(String, String)])
+
+  /** Schemas only — no session, file index or data is held. */
+  private val parquetSchemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  private def inferenceConf(key: String): Boolean =
+    key == "spark.sql.caseSensitive" ||
+      Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.")
+        .exists(key.startsWith)
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory) None
+      else Some(SchemaKey(fs.makeQualified(p).toString, st.getLen,
+        st.getModificationTime,
+        spark.conf.getAll.toSeq.filter(kv => inferenceConf(kv._1)).sorted))
+    } catch { case NonFatal(_) => None }
+
+  /** Right(schema) on a hit; on a miss, Left(the inferring read itself),
+    * so a miss reads the footer once, not twice.
+    */
+  private def cachedParquet(spark: SparkSession,
+      path: String): Either[DataFrame, StructType] =
+    schemaKey(spark, path) match {
+      case None => Left(spark.read.parquet(path))
+      case Some(k) =>
+        val hit = parquetSchemas.get(k)
+        if (hit != null) Right(hit)
+        else {
+          val df = spark.read.parquet(path)
+          parquetSchemas.put(k, df.schema)
+          Left(df)
+        }
+    }
 
   /** Sinks (capability superset — the reference has display-only sinks:
     * `df/show` `src/main.rs:552-559`, `df/collect` `src/main.rs:523-531`).

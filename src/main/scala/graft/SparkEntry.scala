@@ -42,7 +42,7 @@ object SparkEntry {
       sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/root/repo/target/graft-scratch"))
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = Engine.table(s, dir, name)
     // events.ts has shipped as TIMESTAMP(NANOS) (read as int64 under
     // spark.sql.legacy.parquet.nanosAsLong) and as tz-naive
     // TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ under default NTZ
@@ -400,7 +400,7 @@ object SparkEntry {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
     s2.conf.set("spark.sql.adaptive.rebalancePartitionsSmallPartitionFactor", "0.2")
-    Engine.readParquet(s2, s"$dir/events.parquet")
+    Engine.table(s2, dir, "events")
       // skew splits happen at MAP-OUTPUT granularity: a single-mapper
       // shuffle (one small input file) has nothing to split along, so
       // give the rebalance shuffle the multiple mappers any real corpus

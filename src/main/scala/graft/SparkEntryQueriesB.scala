@@ -1645,8 +1645,8 @@ private[graft] object SparkEntryQueriesB {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       s2.conf.set("spark.sql.optimizer.runtimeFilter.number.threshold", "10")
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val l = Engine.readParquet(s2, s"$dir/lineitem.parquet")
-      val p = Engine.readParquet(s2, s"$dir/part.parquet")
+      val l = Engine.table(s2, dir, "lineitem")
+      val p = Engine.table(s2, dir, "part")
         .filterCol(col("p_size") === 1)
       l.join(p, l("l_partkey") === p("p_partkey"))
         .groupBy(col("p_brand"))

@@ -1306,6 +1306,8 @@ object Relational {
     */
   def probeBucket(v: Column, bounds: Seq[Long], strict: Boolean = false): Column = {
     val b = bounds.toIndexedSeq
+    require(b.zip(b.drop(1)).forall { case (x, y) => x <= y },
+      s"probeBucket bounds must be non-decreasing, got ${b.mkString(", ")}")
     def go(lo: Int, hi: Int): Column =
       if (lo == hi) lit(lo)
       else {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Engine
+
 /** Structured Streaming extension (the reference has NO streaming surface —
   * SURVEY.md §2.6; this is the beyond-parity path for the `events` table).
   *
@@ -249,7 +251,7 @@ object EventStreams {
     */
   def runFunnelSmoke(spark: SparkSession, parquetPath: String, queryName: String,
       stages: Seq[(String, Column)], winMicros: Long = 86400000000L): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val stream = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
@@ -365,7 +367,7 @@ object EventStreams {
     */
   def runSessionizeSmoke(spark: SparkSession, parquetPath: String, queryName: String,
       gapMinutes: Int = 30, noDataBatches: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
@@ -399,7 +401,7 @@ object EventStreams {
   def runWindowedTopK(spark: SparkSession, parquetPath: String,
       queryName: String, windowLen: String = "1 hour", k: Int = 3): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val drained = withConfs(spark, smokeConfs(spark, parquetPath)) {
@@ -673,7 +675,9 @@ object EventStreams {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         l.toString
       }
-    val schema = spark.read.parquet(landing).schema
+    // the landing copy holds the source's bytes under a fresh mtime, so
+    // its schema is the source's, and the source's is the cached one
+    val schema = Engine.parquetSchema(spark, srcParquet)
     val q = spark.readStream.schema(schema).parquet(landing)
       .select(projectCols.map(col): _*)
       .writeStream
@@ -714,7 +718,7 @@ object EventStreams {
       fresh: Boolean = true): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     if (fresh) Seq(storeDir, checkpointDir).foreach(deleteRecursively)
-    val schema = spark.read.parquet(srcParquet).schema
+    val schema = Engine.parquetSchema(spark, srcParquet)
     // size-derived shuffle partitions for the per-batch latestPerKey
     // groupBys (the store write already repartitions on the bucket column)
     withConfs(spark, smokeConfs(spark, srcParquet)) {
@@ -807,7 +811,7 @@ object EventStreams {
       fresh: Boolean = true): Unit = {
     import graft.operators.Relational
     if (fresh) Seq(storeRoot, checkpointDir).foreach(deleteRecursively)
-    val schema = spark.read.parquet(srcParquet).schema
+    val schema = Engine.parquetSchema(spark, srcParquet)
     def latestVersion(): Option[String] = {
       val root = java.nio.file.Paths.get(storeRoot)
       if (!java.nio.file.Files.exists(root)) None
@@ -864,7 +868,7 @@ object EventStreams {
     */
   def runDedupSmoke(spark: SparkSession, parquetPath: String, queryName: String,
       keyCols: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath)) {
@@ -901,7 +905,7 @@ object EventStreams {
       queryName: String, rules: Seq[(String, Column)]): DataFrame = {
     import graft.operators.Validation
     require(rules.nonEmpty, "validation gate needs at least one rule")
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val aggs = Validation.rulesAgg(rules)
@@ -934,7 +938,7 @@ object EventStreams {
   def runHllStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, valueName: String, b: Int = 6): DataFrame = {
     import graft.operators.Corpus
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val sparse = withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = Corpus.hllRho(raw, col(valueName), b)
@@ -955,7 +959,7 @@ object EventStreams {
     }
     // materialize the instrument eagerly: callers stage the source into a
     // temp dir and delete it on return, so nothing may stay lazy over it
-    val neDf = spark.read.parquet(parquetPath)
+    val neDf = spark.read.schema(schema).parquet(parquetPath)
       .agg(countDistinct(col(valueName)).alias("n_exact"))
     val ne = spark.createDataFrame(
       java.util.Arrays.asList(neDf.collect(): _*), neDf.schema)
@@ -972,7 +976,7 @@ object EventStreams {
   def runOhlcStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, keyCol: String, tieCol: String,
       valueExpr: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = normalizeTs(schema,
       spark.readStream.schema(schema).parquet(parquetPath))
     val ord = struct(col("ts").alias("t"), col(tieCol).alias("tb"))
@@ -1009,7 +1013,7 @@ object EventStreams {
     */
   def runBenfordStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, valueExpr: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = raw.select(expr(valueExpr).cast("long").alias("v"))
@@ -1043,7 +1047,7 @@ object EventStreams {
   def runDriftStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, category: String, refFilter: String,
       curFilter: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val curCounts = withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = raw.filter(expr(curFilter))
@@ -1063,7 +1067,7 @@ object EventStreams {
       spark.catalog.dropTempView(queryName)
       out
     }
-    val refDf = spark.read.parquet(parquetPath).filter(expr(refFilter))
+    val refDf = spark.read.schema(schema).parquet(parquetPath).filter(expr(refFilter))
       .groupBy(col(category).alias("category"))
       .agg(count(lit(1)).alias("n_ref"))
     val refRows = java.util.Arrays.asList(refDf.collect(): _*)
@@ -1083,7 +1087,7 @@ object EventStreams {
       queryName: String, valueName: String, windowLen: String = "1 hour",
       b: Int = 6): DataFrame = {
     import graft.operators.Corpus
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     val sparse = withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = Corpus.hllRho(raw, col(valueName), b,
@@ -1107,7 +1111,7 @@ object EventStreams {
     val dense = Corpus.hllFinalizeGrouped(sparse, b)
     // exact-distinct-per-window instrument, materialized eagerly (callers
     // delete the staged source on return)
-    val neDf = normalizeTs(schema, spark.read.parquet(parquetPath))
+    val neDf = normalizeTs(schema, spark.read.schema(schema).parquet(parquetPath))
       .groupBy(window(col("ts"), windowLen).getField("start").alias("group"))
       .agg(countDistinct(col(valueName)).alias("n_exact"))
     val ne = spark.createDataFrame(
@@ -1154,7 +1158,7 @@ object EventStreams {
     */
   def runStreamEnrichSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, dim: DataFrame, keys: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val q = streamStaticEnrich(stream, dim, keys).writeStream
@@ -1222,7 +1226,7 @@ object EventStreams {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val stageDir = stagedOnce(s"mod3|$srcParquet") { dir =>
-      val src = spark.read.parquet(srcParquet)
+      val src = Engine.readParquet(spark, srcParquet)
       (0 until 3).foreach { i =>
         val tmp = s"$dir/_tmp$i"
         src.where(pmod(col("event_id"), lit(3)) === i)
@@ -1235,7 +1239,7 @@ object EventStreams {
         deleteRecursively(tmp)
       }
     }
-    val schema = spark.read.parquet(stageDir).schema
+    val schema = Engine.parquetSchema(spark, stageDir)
     val confs = eventSmokeConfs(spark, stageDir) :+
       ("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -1449,7 +1453,7 @@ object EventStreams {
   private def stageTimeSplitFiles(spark: SparkSession, srcParquet: String,
       splitTs: Seq[String]): (String, org.apache.spark.sql.types.StructType) = {
     val stageDir = stagedOnce(s"timesplit|$srcParquet|${splitTs.mkString(",")}") { dir =>
-      val raw = spark.read.parquet(srcParquet)
+      val raw = Engine.readParquet(spark, srcParquet)
       val src = normalizeTs(raw.schema, raw)
       val bounds = (None +: splitTs.map(Option(_))).zip(splitTs.map(Option(_)) :+ None)
       bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
@@ -1467,7 +1471,7 @@ object EventStreams {
         deleteRecursively(tmp)
       }
     }
-    (stageDir, spark.read.parquet(stageDir).schema)
+    (stageDir, Engine.parquetSchema(spark, stageDir))
   }
 
   /** TRUE left-outer stream-stream join with DETERMINISTIC eviction
@@ -1632,7 +1636,7 @@ object EventStreams {
   def runStreamJoinSmoke(spark: SparkSession, parquetPath: String, queryName: String,
       keys: Seq[String], leftType: String, rightType: String,
       windowSeconds: Long, drain: String = "parquet"): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     def stream(): DataFrame =
       normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     val joined = streamStreamJoin(
@@ -2841,7 +2845,7 @@ object EventStreams {
   def runLshIngestSmoke(spark: SparkSession, parquetDir: String,
       idName: String, textName: String, threshold: Double = 0.8): DataFrame = {
     import graft.operators.Dedup
-    val schema = spark.read.parquet(parquetDir).schema
+    val schema = Engine.parquetSchema(spark, parquetDir)
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(parquetDir)
     val results = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -2876,7 +2880,7 @@ object EventStreams {
   }
 
   def runStreamingSmoke(spark: SparkSession, parquetPath: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     // Under spark.sql.legacy.parquet.nanosAsLong a TIMESTAMP(NANOS) column
     // arrives as int64 nanos; rebuild the microsecond timestamp (integer

@@ -769,6 +769,16 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("probeBucket: decreasing bounds are rejected before a plan is built") {
+    import graft.operators.Relational
+    // the binary search is only exact over non-decreasing bounds; an
+    // unsorted array would bucket silently wrong, so it must not plan
+    for (bounds <- Seq(Seq(20L, 10L), Seq(0L, 5L, 5L, 4L))) {
+      val e = intercept[IllegalArgumentException](Relational.probeBucket($"v", bounds))
+      assert(e.getMessage.contains("non-decreasing"))
+    }
+  }
+
   test("concurrencyProfile: sweep-line running count, half-open boundary, layout-independent") {
     import graft.operators.Relational
     // intervals: 1:[0,10) 2:[5,15) 3:[10,20) 4:[12,14)

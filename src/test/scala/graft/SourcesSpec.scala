@@ -1,6 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.ColFns
@@ -16,6 +22,114 @@ class SourcesSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  /** `df` as ONE parquet file at `path` (the testdata layout), replacing
+    * whatever file was there.
+    */
+  private def writeFile(df: DataFrame, path: String): Unit = {
+    val tmp = s"$path.tmp"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events are async, so a labelled fence job runs after `body`: events
+    * arrive in order, and once the fence is seen every job `body` started
+    * has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      sc.setJobDescription("fence")
+      try spark.range(1).collect() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("fence"), "listener never saw the fence job")
+      (result, seen.asScala.count(_ != "fence"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Engine.table: a repeated read of one file plans with no Spark job, same schema and rows") {
+    import spark.implicits._
+    val dir = tmpDir("graft-schema")
+    writeFile(Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "v"), s"$dir/t.parquet")
+    // the first read infers the schema (a job); the second reuses it
+    assert(jobsDuring(Engine.table(spark, dir, "t"))._2 >= 1)
+    val (again, jobs) = jobsDuring(Engine.table(spark, dir, "t"))
+    assert(jobs == 0)
+    val plain = spark.read.parquet(s"$dir/t.parquet")
+    assert(again.schema == plain.schema)
+    assert(again.collect().toSeq.sortBy(_.getLong(0)) == plain.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
+  test("Engine.table: a rewritten file is re-inferred") {
+    import spark.implicits._
+    val dir = tmpDir("graft-schema-rw")
+    writeFile(Seq((1L, "a")).toDF("id", "s"), s"$dir/t.parquet")
+    assert(Engine.table(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    writeFile(Seq((1L, 2.0, 3)).toDF("id", "x", "y"), s"$dir/t.parquet")
+    val back = Engine.table(spark, dir, "t")
+    assert(back.columns.toSeq == Seq("id", "x", "y"))
+    assert(back.collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq ==
+      Seq((1L, 2.0, 3)))
+  }
+
+  test("Engine.parquetSchema: a session that infers differently gets its own schema") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpDir("graft-schema-conf")
+    // written by plain parquet-mr: a Spark-written file carries its Spark
+    // schema in the footer, which inference prefers over binaryAsString
+    val msg = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary b; }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/t.parquet"), spark.sparkContext.hadoopConfiguration))
+      .withType(msg).build()
+    try w.write(new SimpleGroupFactory(msg).newGroup().append("id", 1L).append("b", "hi"))
+    finally w.close()
+    assert(Engine.parquetSchema(spark, s"$dir/t.parquet")("b").dataType == BinaryType)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(Engine.parquetSchema(s2, s"$dir/t.parquet")("b").dataType == StringType)
+    assert(Engine.table(s2, dir, "t").select("b").as[String].collect().toSeq == Seq("hi"))
+    // and the first session still reads binary
+    assert(Engine.parquetSchema(spark, s"$dir/t.parquet")("b").dataType == BinaryType)
+  }
+
+  test("Engine.parquetSchema: a directory is re-inferred after it is overwritten") {
+    import spark.implicits._
+    val dir = tmpDir("graft-schema-dir")
+    Engine.writeParquet(Seq((1L, "a")).toDF("id", "s"), s"$dir/d")
+    val d = new java.io.File(s"$dir/d")
+    val mtime = d.lastModified()
+    assert(Engine.parquetSchema(spark, s"$dir/d").fieldNames.toSeq == Seq("id", "s"))
+    // new files under an unchanged directory status: only re-inference
+    // can see them
+    Engine.writeParquet(Seq((1L, 2.0)).toDF("id", "x"), s"$dir/d")
+    assert(d.setLastModified(mtime))
+    assert(Engine.parquetSchema(spark, s"$dir/d").fieldNames.toSeq == Seq("id", "x"))
+  }
+
+  test("Engine.table: a missing path still raises Spark's AnalysisException") {
+    val dir = tmpDir("graft-schema-missing")
+    val e = intercept[AnalysisException](Engine.table(spark, dir, "nope"))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    intercept[AnalysisException](Engine.parquetSchema(spark, s"$dir/nope.parquet"))
+  }
 
   test("readCsv: header names + inferred int schema, then the test.scm pipeline") {
     val dir = tmpDir("graft-csv")
