@@ -26,48 +26,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Bench-mode scratch on tmpfs when available: the ~15 queries whose
-    // contract includes a write (format round-trips, streaming stores,
-    // compaction) otherwise measure the box's disk alongside the
-    // operator. /dev/shm keeps the write semantics (real files, real
-    // commit protocol) while removing disk noise — a 100 TB deployment
-    // would put these on cluster storage either way. Verify keeps the
-    // disk default: correctness is location-independent. Opt out by
-    // setting SPARK_GRAFT_SCRATCH (or the graft.scratch sysprop).
-    val shmScratch =
-      if (sys.props.get("graft.scratch").isEmpty &&
-          sys.env.get("SPARK_GRAFT_SCRATCH").isEmpty &&
-          new java.io.File("/dev/shm").canWrite) {
-        val d = s"/dev/shm/graft-scratch-${ProcessHandle.current().pid()}"
-        sys.props("graft.scratch") = d
-        Some(d)
-      } else None
-    def deleteRecursive(d: String): Unit =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
-          .toSeq.sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    // tmpfs is box-global shared memory: a crashed/SIGTERM'd bench must
-    // not leak its scratch zone (unlike /tmp, nothing reclaims /dev/shm),
-    // so the cleanup also runs as a JVM shutdown hook — the end-of-main
-    // delete below still covers the normal path where the hook fires
-    // after spark.stop() has released its files.
-    shmScratch.foreach { d =>
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursive(d)))
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the ~15 queries whose contract includes a write (format round-trips,
+    // streaming stores, compaction) would otherwise measure the box's disk
+    // alongside the operator; opt out by setting SPARK_GRAFT_SCRATCH (or
+    // the graft.scratch sysprop)
+    SparkEntry.useTmpfsScratch()
+    val spark = Engine.create("graft-bench")
     // Warm the JVM/codegen paths once so per-query numbers measure the
     // engine, not first-call classloading.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -597,9 +561,6 @@ object Bench {
       }
     println(stdoutLine)
     spark.stop()
-    // best-effort tmpfs scratch cleanup on the normal path (the shutdown
-    // hook above covers crash/SIGTERM; deleteIfExists makes both idempotent)
-    shmScratch.foreach(deleteRecursive)
   }
 
   /** Scale the sf corpora to 100k rows and time each dedup/ANN operator at
@@ -1064,11 +1025,7 @@ object Bench {
       counts("ivfpq_adc_cand") = Seq(500, 1000, 2000).map(b => (b * VE.toLong, ivfpqCand(b)))
 
     // best-effort temp cleanup (bench correctness does not depend on it)
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(scaleDir)).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    try SparkEntry.deleteRecursively(scaleDir) catch { case _: Throwable => () }
 
     (out.filter(_._2.nonEmpty).map { case (op, pts) =>
       "\"" + op + "\":" + pts.map { case (n, s) => "\"" + n + "\":" + s }.mkString("{", ",", "}")

@@ -32,14 +32,44 @@ object SparkEntry {
 
   /** Scratch root for queries whose CONTRACT includes a write (format
     * round-trips, streaming stores/checkpoints, compaction). Default: the
-    * repo's target dir. Bench redirects it to tmpfs via the
-    * `graft.scratch` system property (or SPARK_GRAFT_SCRATCH) so those
-    * queries measure the operator, not the box's disk; Verify keeps the
-    * disk default — correctness is location-independent.
+    * repo's target dir; the `graft.scratch` system property (or
+    * SPARK_GRAFT_SCRATCH) overrides it. Bench and Diag move it to tmpfs
+    * through [[useTmpfsScratch]]; Verify keeps the disk default —
+    * correctness is location-independent.
     */
   def scratchRoot: String =
     sys.props.getOrElse("graft.scratch",
       sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/root/repo/target/graft-scratch"))
+
+  /** Point [[scratchRoot]] at a per-process tmpfs directory when no root
+    * was chosen (neither `graft.scratch` nor SPARK_GRAFT_SCRATCH is set)
+    * and `/dev/shm` is writable, so the queries whose contract includes a
+    * write measure the operator, not the box's disk, while keeping real
+    * files and the real commit protocol. tmpfs is box-global shared memory
+    * that nothing reclaims, so a JVM shutdown hook deletes the directory;
+    * the hook runs on normal exit, on an uncaught exception and on SIGTERM.
+    */
+  private[graft] def useTmpfsScratch(): Unit =
+    if (sys.props.get("graft.scratch").isEmpty &&
+        sys.env.get("SPARK_GRAFT_SCRATCH").isEmpty &&
+        new java.io.File("/dev/shm").canWrite) {
+      val d = s"/dev/shm/graft-scratch-${ProcessHandle.current().pid()}"
+      sys.props("graft.scratch") = d
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        try deleteRecursively(d) catch { case _: Throwable => () }))
+    }
+
+  /** Delete `d` and everything under it; a missing `d` is a no-op. Failures
+    * propagate: best-effort cleanups wrap the call, fresh-start sinks must
+    * not run on a half-deleted store.
+    */
+  private[graft] def deleteRecursively(d: String): Unit = {
+    val p = java.nio.file.Paths.get(d)
+    if (java.nio.file.Files.exists(p)) {
+      val it = java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      try it.forEach(java.nio.file.Files.delete(_)) finally it.close()
+    }
+  }
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = Engine.table(s, dir, name)

@@ -1398,7 +1398,9 @@ private[graft] object SparkEntryOraclesA {
          ORDER BY id_a, id_b""",
 
     // the sweep replayed with SQL windows; island totals are tie-order
-    // independent (see Relational.intervalCoverage scaladoc).
+    // independent (see Relational.intervalCoverage scaladoc). Rows tied on
+    // (k, s, e) differ only in ni, and at most one has ni = 1: `isl` puts
+    // that row first, or a tied ni = 0 copy would join the previous island.
     "q328_interval_coverage" ->
       """WITH iv AS (SELECT l_suppkey AS k,
              CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS s,
@@ -1413,7 +1415,7 @@ private[graft] object SparkEntryOraclesA {
              CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END AS ni
            FROM m),
          isl AS (SELECT k, s, e,
-             sum(ni) OVER (PARTITION BY k ORDER BY s, e
+             sum(ni) OVER (PARTITION BY k ORDER BY s, e, ni DESC
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
            FROM fl),
          g AS (SELECT k, island, min(s) AS i_s, max(e) AS i_e,

@@ -12,7 +12,7 @@ import graft.operators.Relational
 import graft.operators.Relational.GraftOps
 import graft.streaming.EventStreams
 
-import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced}
+import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, deleteRecursively, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced}
 
 /** [[SparkEntry.queries]] part: 196 entries, q371_concentration .. q65_centroid_assign. Mechanical split
   * of the single registry map (round 12) — entry order, bodies, and keys
@@ -2392,7 +2392,7 @@ private[graft] object SparkEntryQueriesB {
         .withColumn("qid", lit(1L))
       // identity limit: the equi-join on the unique doc_id key returns
       // exactly the 20 candidate rows, but only a static Limit gives the
-      // plan a provable maxRows — which is what lets ExplainAudit verify
+      // plan a provable maxRows — which is what lets ExplainAuditSpec verify
       // the theta-join below is bounded rather than exempting it
       val ct = cand.join(toks, "doc_id").limit(20)
       val a = ct.selectCols(Seq(col("doc_id").as("id_a"), col("tk").as("tk_a")))
@@ -3143,8 +3143,7 @@ private[graft] object SparkEntryQueriesB {
           val dest = stagedP.resolve(name + ".parquet")
           java.nio.file.Files.move(part, dest)
           dest.toFile.setLastModified(modTime)
-          java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          deleteRecursively(tmp.toString)
         }
         val mid = t(s, dir, "documents").count() / 2
         writeHalf(col("doc_id") < mid, "b0", 1000000000L)

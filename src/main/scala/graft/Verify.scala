@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -22,18 +21,9 @@ object Verify {
     val only: String => Boolean =
       if (args.length > 2) { val ps = args(2).split(',').toSeq; n => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // sf0.01 inputs are tiny — 8 shuffle partitions keeps task-scheduling
-      // overhead down; correctness is partition-count independent.
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // sf0.01 inputs are tiny — 8 shuffle partitions keeps task-scheduling
+    // overhead down; correctness is partition-count independent.
+    val spark = Engine.create("graft-verify", shufflePartitions = 8)
     new java.io.File(outDir).mkdirs()
     val work = SparkEntry.queries.filter(kv => only(kv._1)).toSeq.sortBy(_._1)
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt

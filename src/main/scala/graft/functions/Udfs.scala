@@ -22,37 +22,6 @@ import org.apache.spark.sql.types.DataType
   */
 object Udfs {
 
-  /** `define-udf` — typed via explicit return DataType, matching the
-    * reference's signature `(ctx, name, arg-types, ret-type, fn)`. The
-    * arg types are enforced by Spark's analyzer at bind time; we accept
-    * them for contract documentation and cast call-sites accordingly.
-    */
-  def defineUdf1[A](spark: SparkSession, name: String, ret: DataType, f: A => Any): UserDefinedFunction = {
-    val u = udf(new org.apache.spark.sql.api.java.UDF1[A, Any] { def call(a: A): Any = f(a) }, ret)
-    spark.udf.register(name, u)
-    u
-  }
-
-  def defineUdf2[A, B](spark: SparkSession, name: String, ret: DataType, f: (A, B) => Any): UserDefinedFunction = {
-    val u = udf(new org.apache.spark.sql.api.java.UDF2[A, B, Any] { def call(a: A, b: B): Any = f(a, b) }, ret)
-    spark.udf.register(name, u)
-    u
-  }
-
-  def defineUdf3[A, B, C](spark: SparkSession, name: String, ret: DataType, f: (A, B, C) => Any): UserDefinedFunction = {
-    val u = udf(
-      new org.apache.spark.sql.api.java.UDF3[A, B, C, Any] { def call(a: A, b: B, c: C): Any = f(a, b, c) },
-      ret
-    )
-    spark.udf.register(name, u)
-    u
-  }
-
-  /** `udf/call` — `src/main.rs:138-142,521`: build an invocation expression
-    * from a UDF handle + argument exprs.
-    */
-  def udfCall(u: UserDefinedFunction, args: Seq[Column]): Column = u(args: _*)
-
   /** UDF handle carrying the DECLARED contract — the reference's
     * `(name, arg-types, ret-type)` triple. [[udfCall(g:GraftUdf*]] enforces
     * it at graft level (the reference accepts the list but its stub bridge
@@ -99,12 +68,6 @@ object Udfs {
           s"(${g.argTypes.map(_.simpleString).mkString(", ")}), got ${args.length}")
     g.fn(args.zip(g.argTypes).map { case (c, t) => c.cast(t) }: _*)
   }
-
-  /** Call a UDF registered by name (the reference resolves through the
-    * session's registry; Spark's equivalent is `call_function`).
-    */
-  def udfCallByName(name: String, args: Seq[Column]): Column =
-    org.apache.spark.sql.functions.call_function(name, args: _*)
 
   /** The reference's datatype surface: the 17 Arrow types exposed as
     * first-class values in module `steel/datafusion/datatypes`

@@ -40,19 +40,6 @@ object Iterative {
     */
   val batchRows: Long = 2L * 1000 * 1000
 
-  /** Is this (already materialized) frame small enough to batch on?
-    * Checks the FREE optimizer estimate first — when it says small, it is
-    * trustworthy (estimates err upward through join/agg derivation, never
-    * downward past real size) and the gate costs nothing. Only an
-    * inflated estimate pays one count job on the checkpoint blocks to
-    * learn the truth (q349's ~12k-row BFS frontier estimated > 64 MB —
-    * the always-count variant cost ~0.1 s/round on loops whose estimates
-    * were fine, measured +0.8 s on q334/q370).
-    */
-  def smallMaterialized(df: DataFrame): Boolean =
-    org.apache.spark.sql.graft.Bridge.statsSizeInBytes(df) <= (64L << 20) ||
-      df.count() <= batchRows
-
   /** The dir this JVM last passed to setCheckpointDir. The stored
     * SparkContext value is NOT comparable to the caller's string —
     * setCheckpointDir records a scheme-qualified per-run UUID child

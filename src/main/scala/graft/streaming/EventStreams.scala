@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Engine
+import graft.SparkEntry.deleteRecursively
 
 /** Structured Streaming extension (the reference has NO streaming surface —
   * SURVEY.md §2.6; this is the beyond-parity path for the `events` table).
@@ -644,15 +645,6 @@ object EventStreams {
       srcPaths: String*): Seq[(String, String)] =
     Seq("spark.sql.shuffle.partitions" ->
       streamShufflePartitions(spark, 256L << 10, srcPaths).toString)
-
-  /** Recursive delete shared by the fresh-start sinks. */
-  private def deleteRecursively(d: String): Unit = {
-    val p = java.nio.file.Paths.get(d)
-    if (java.nio.file.Files.exists(p)) {
-      val it = java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-      try it.forEach(java.nio.file.Files.delete(_)) finally it.close()
-    }
-  }
 
   def runPartitionedIngest(spark: SparkSession, srcParquet: String,
       dstDir: String, checkpointDir: String, partitionCols: Seq[String],

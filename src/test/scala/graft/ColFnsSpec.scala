@@ -42,11 +42,15 @@ class ColFnsSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](ColFns.add())
   }
 
-  test("eq is null-propagating (not null-safe)") {
-    val df = Seq((Some(1), Some(1)), (None, Some(1)), (None, None))
+  test("eq, leq and neq are null-propagating (not null-safe)") {
+    val df = Seq((Some(1), Some(1)), (Some(2), Some(1)), (None, Some(1)), (None, None))
       .toDF("x", "y")
-    val kept = df.filter(ColFns.eq(col("x"), col("y"))).count()
-    assert(kept == 1) // NULL = anything -> NULL, filtered out (even NULL = NULL)
+    def kept(c: org.apache.spark.sql.Column): Seq[Int] =
+      df.filter(c).collect().map(_.getInt(0)).toSeq.sorted
+    // NULL <op> anything -> NULL, filtered out (even NULL = NULL)
+    assert(kept(ColFns.eq(col("x"), col("y"))) == Seq(1))
+    assert(kept(ColFns.leq(col("x"), col("y"))) == Seq(1))
+    assert(kept(ColFns.neq(col("x"), col("y"))) == Seq(2))
   }
 
   test("LIKE family with expression-valued patterns") {

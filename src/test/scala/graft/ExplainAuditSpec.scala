@@ -195,4 +195,14 @@ class ExplainAuditSpec extends SparkSpec {
         s"leaf without ANALYZE'd rowCount under CBO — stats are not flowing:\n$l")
     }
   }
+
+  test("Diag plan writes one formatted plan per known query and skips an unknown name") {
+    val out = java.nio.file.Files.createTempDirectory("diag-plan")
+    Diag.plan(spark, sfDir, out.toString, "t", Seq("q02_filter", "q_no_such_query"))
+    val written = out.toFile.list().toSeq
+    assert(written == Seq("q02_filter_t.txt"))
+    val text = new String(java.nio.file.Files.readAllBytes(out.resolve("q02_filter_t.txt")), "UTF-8")
+    assert(text.contains("== Physical Plan =="))
+    SparkEntry.deleteRecursively(out.toString)
+  }
 }

@@ -16,18 +16,7 @@ object RelationalProps extends Properties("relational") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10).withMaxSize(12)
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-props")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = Engine.create("graft-test", "local[4]", 4)
 
   private val rowsGen: Gen[List[(Int, Int)]] =
     Gen.listOf(Gen.zip(Gen.choose(-5, 5), Gen.choose(-5, 5)))
@@ -249,7 +238,6 @@ object RelationalProps extends Properties("relational") {
   property("graft_corr_exact is partitioning-invariant and matches the closed form") =
     forAll(Gen.listOfN(8, Gen.zip(Gen.choose(-50, 50), Gen.choose(-50, 50))),
       Gen.choose(1, 8)) { (rows, parts) =>
-      graft.functions.Udafs.register(spark)
       val df = spark.createDataFrame(rows.map { case (x, y) => (x.toDouble, y.toDouble) })
         .toDF("x", "y").repartition(parts)
       df.createOrReplaceTempView("corr_prop_t")

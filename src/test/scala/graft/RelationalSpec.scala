@@ -496,6 +496,20 @@ class RelationalSpec extends SparkSpec {
     assert(rows("mean").getString(2) == null)      // non-numeric => null
   }
 
+  test("showAll prints every row untruncated; showLimit(n) prints n rows") {
+    val long = "x" * 30   // past show()'s 20-char cell truncation
+    val df = (1 to 25).map(i => (i, long)).toDF("i", "s")
+    def printed(show: => Unit): Seq[String] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(show)
+      // data rows are the "|"-framed lines after the header row
+      buf.toString("UTF-8").linesIterator.filter(_.startsWith("|")).drop(1).toSeq
+    }
+    val all = printed(df.showAll())
+    assert(all.size == 25 && all.forall(_.contains(long)))
+    assert(printed(df.showLimit(3)).size == 3)
+  }
+
   test("rollingAgg ROWS frame: last-3 sums per key in total order; frames reset at key change") {
     val df = Seq(
       ("a", 1L, 10.0), ("a", 2L, 20.0), ("a", 3L, 30.0), ("a", 4L, 40.0),

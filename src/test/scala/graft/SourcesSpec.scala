@@ -59,6 +59,14 @@ class SourcesSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("Engine.create pins the confs the testdata timestamp contract reads through") {
+    // nanos-encoded ts read as int64, micros-encoded ts as LTZ not NTZ,
+    // both normalized in UTC (SparkEntry.t / EventStreams.normalizeTs)
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("Engine.table: a repeated read of one file plans with no Spark job, same schema and rows") {
     import spark.implicits._
     val dir = tmpDir("graft-schema")

@@ -813,9 +813,7 @@ class StreamingSpec extends SparkSpec {
             moved = true
           }
         }
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        SparkEntry.deleteRecursively(tmp.toString)
       }
       val got = EventStreams.runLshIngestSmoke(spark, dir.toString,
           "doc_id", "text", threshold = 0.6)
@@ -837,9 +835,7 @@ class StreamingSpec extends SparkSpec {
           (r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
       assert(got == oneShot)
     } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      SparkEntry.deleteRecursively(dir.toString)
     }
   }
 
