@@ -5,6 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
+  UnsupportedAudioFileException}
+import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter}
+
 /** Multimodal column plumbing (beyond-parity extension, SURVEY.md §7):
   * image/audio/video payloads ride as opaque `BinaryType` columns with a
   * typed metadata struct; feature extraction runs batched per partition.
@@ -291,6 +296,63 @@ object Multimodal {
   // ---- REAL audio codec (javax.sound.sampled — pure JDK: WAV/AIFF/AU PCM
   // readers ship with the JRE) ---------------------------------------------
 
+  /** The JDK's audio file providers, resolved once per JVM: AudioSystem
+    * resolves them again on every call, a class-path scan under one
+    * JVM-wide lock (JDK 17 keeps no cache) that serialized every task of an
+    * audio query. Kept in AudioSystem's order, the reverse of
+    * ServiceLoader's, so first-match picks the same codec and writes the
+    * same bytes. The JDK providers are stateless; all threads share them.
+    */
+  private def audioProviders[T](cls: Class[T]): List[T] =
+    java.util.ServiceLoader.load(cls).asScala.foldLeft(List.empty[T])((ps, p) => p :: ps)
+  private lazy val audioWriters = audioProviders(classOf[AudioFileWriter])
+  private lazy val audioReaders = audioProviders(classOf[AudioFileReader])
+
+  /** `pcm` as WAV bytes from the first writer that takes its format. */
+  private def wavBytes(pcm: Array[Byte], format: AudioFormat): Array[Byte] = {
+    val ais = new AudioInputStream(new java.io.ByteArrayInputStream(pcm), format,
+      pcm.length / format.getFrameSize)
+    val out = new java.io.ByteArrayOutputStream()
+    // a writer that cannot write the format throws before it reads the stream
+    if (!audioWriters.exists(w => try { w.write(ais, AudioFileFormat.Type.WAVE, out); true }
+        catch { case _: IllegalArgumentException => false }))
+      throw new IllegalArgumentException(s"no WAVE writer for $format")
+    out.toByteArray
+  }
+
+  /** The decode front end of every audio kernel: (format, raw sample
+    * bytes) from the first reader that parses the payload; None for null,
+    * empty, non-16-bit or unsupported input.
+    */
+  private[graft] def pcm16(bytes: Array[Byte]): Option[(AudioFormat, Array[Byte])] =
+    if (bytes == null || bytes.isEmpty) None
+    else try {
+      val in = new java.io.ByteArrayInputStream(bytes)
+      audioReaders.iterator.flatMap { r =>
+        try Some(r.getAudioInputStream(in))
+        catch { case _: UnsupportedAudioFileException => None }
+      }.nextOption()
+        .filter(_.getFormat.getSampleSizeInBits == 16)
+        .map(ais => (ais.getFormat, ais.readAllBytes()))
+    } catch { case _: Exception => None }
+
+  /** Signed 16-bit sample at byte offset `i` of [[pcm16]]'s sample bytes. */
+  @inline private def sample16(data: Array[Byte], i: Int, le: Boolean): Int =
+    if (le) (data(i + 1) << 8) | (data(i) & 0xff) else (data(i) << 8) | (data(i + 1) & 0xff)
+
+  /** `n` samples `f(0) … f(n-1)` as 16-bit signed little-endian PCM. */
+  private def pcm16le(n: Int)(f: Int => Int): Array[Byte] = {
+    val pcm = new Array[Byte](n * 2)
+    var i = 0
+    while (i < n) {
+      val s = f(i)
+      pcm(2 * i) = (s & 0xff).toByte
+      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+      i += 1
+    }
+    pcm
+  }
+
   /** Deterministic 16-bit PCM WAV test pattern: interleaved sample(i) =
     * ((seed*31 + i*7) mod 65536) - 32768 over `nSamples` TOTAL samples
     * (`nSamples / channels` frames) — the audio sibling of
@@ -298,26 +360,11 @@ object Multimodal {
     * decoder's exact sample sums.
     */
   def synthPcmWav(seed: Long, nSamples: Int, sampleRate: Int = 8000,
-      channels: Int = 1): Array[Byte] = {
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, channels, true, false)
-    val pcm = new Array[Byte](nSamples * 2)
-    var i = 0
-    while (i < nSamples) {
-      val s = (((seed * 31 + i * 7) % 65536) - 32768).toInt
-      pcm(2 * i) = (s & 0xff).toByte // little-endian
-      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      i += 1
-    }
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, (nSamples / channels).toLong)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
-    baos.toByteArray
-  }
+      channels: Int = 1): Array[Byte] =
+    wavBytes(pcm16le(nSamples)(i => (((seed * 31 + i * 7) % 65536) - 32768).toInt),
+      new AudioFormat(sampleRate.toFloat, 16, channels, true, false))
 
-  /** REAL audio decode: parse the payload with AudioSystem and report
+  /** REAL audio decode: parse the payload ([[pcm16]]) and report
     * (n_frames, sample_rate, channels, sample_sum, abs_sum, n_samples) —
     * exact integer sums over the decoded 16-bit samples, the
     * decoded-content witness a SQL oracle can check (abs_sum is the energy
@@ -327,30 +374,21 @@ object Multimodal {
     * channels), never n_frames — returning both makes multi-channel means
     * impossible to get wrong. None for undecodable bytes.
     */
-  def decodeAudioInfo(bytes: Array[Byte]): Option[(Long, Int, Int, Long, Long, Long)] = {
-    if (bytes == null || bytes.isEmpty) return None
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val fmt = ais.getFormat
-      if (fmt.getSampleSizeInBits != 16) return None
-      val data = ais.readAllBytes()
+  def decodeAudioInfo(bytes: Array[Byte]): Option[(Long, Int, Int, Long, Long, Long)] =
+    pcm16(bytes).map { case (fmt, data) =>
       val le = !fmt.isBigEndian
       var sum = 0L
       var abs = 0L
       var i = 0
       while (i + 1 < data.length) {
-        val lo = data(if (le) i else i + 1) & 0xff
-        val hi = data(if (le) i + 1 else i)
-        val s = (hi << 8) | lo
+        val s = sample16(data, i, le)
         sum += s
         abs += math.abs(s)
         i += 2
       }
-      Some((data.length / 2L / fmt.getChannels, fmt.getSampleRate.toInt,
-        fmt.getChannels, sum, abs, data.length / 2L))
-    } catch { case _: Exception => None }
-  }
+      (data.length / 2L / fmt.getChannels, fmt.getSampleRate.toInt,
+        fmt.getChannels, sum, abs, data.length / 2L)
+    }
 
   def decodeAudio: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf { (bytes: Array[Byte]) =>
@@ -368,30 +406,22 @@ object Multimodal {
     * reported with its honest n. None for undecodable bytes.
     */
   def decodeAudioWindowsInfo(bytes: Array[Byte],
-      window: Int): Option[Seq[(Long, Long, Long, Long)]] = {
-    if (bytes == null || bytes.isEmpty || window <= 0) return None
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val fmt = ais.getFormat
-      if (fmt.getSampleSizeInBits != 16) return None
-      val data = ais.readAllBytes()
+      window: Int): Option[Seq[(Long, Long, Long, Long)]] =
+    if (window <= 0) None
+    else pcm16(bytes).map { case (fmt, data) =>
       val le = !fmt.isBigEndian
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
       var w = 0L; var n = 0L; var abs = 0L; var energy = 0L
       var i = 0
       while (i + 1 < data.length) {
-        val lo = data(if (le) i else i + 1) & 0xff
-        val hi = data(if (le) i + 1 else i)
-        val s = (hi << 8) | lo
+        val s = sample16(data, i, le)
         n += 1; abs += math.abs(s); energy += s.toLong * s
         if (n == window) { out += ((w, n, abs, energy)); w += 1; n = 0; abs = 0; energy = 0 }
         i += 2
       }
       if (n > 0) out += ((w, n, abs, energy))
-      Some(out.toSeq)
-    } catch { case _: Exception => None }
-  }
+      out.toSeq
+    }
 
   def decodeAudioWindows: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf { (bytes: Array[Byte], window: Int) =>
@@ -425,23 +455,15 @@ object Multimodal {
     */
   def synthNoisePcmWav(seed: Long, nSamples: Int, sampleRate: Int = 8000): Array[Byte] = {
     require(seed >= 0 && seed < 3400000000L, s"seed out of the no-overflow contract: $seed")
-    val fmt = new javax.sound.sampled.AudioFormat(sampleRate.toFloat, 16, 1, true, false)
-    val pcm = new Array[Byte](nSamples * 2)
-    var i = 0
-    while (i < nSamples) {
-      val h1 = ((seed * 1000003L + i) * 2654435761L) & 0xffffffffL
-      val h2 = ((h1 ^ (h1 >> 16)) * 40503L) & 0xffffffffL
-      val s = ((h2 >> 16) - 32768L).toInt
-      pcm(2 * i) = (s & 0xff).toByte
-      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      i += 1
-    }
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
-    baos.toByteArray
+    wavBytes(pcm16le(nSamples)(i => noiseSample(seed, i)),
+      new AudioFormat(sampleRate.toFloat, 16, 1, true, false))
+  }
+
+  /** Sample `i` of [[synthNoisePcmWav]]'s stream. */
+  private def noiseSample(seed: Long, i: Int): Int = {
+    val h1 = ((seed * 1000003L + i) * 2654435761L) & 0xffffffffL
+    val h2 = ((h1 ^ (h1 >> 16)) * 40503L) & 0xffffffffL
+    ((h2 >> 16) - 32768L).toInt
   }
 
   def synthNoisePcmWavUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
@@ -456,26 +478,8 @@ object Multimodal {
     */
   def synthBurstPcmWav(seed: Long, nSamples: Int, sampleRate: Int = 8000): Array[Byte] = {
     require(seed >= 0 && seed < 3400000000L, s"seed out of the no-overflow contract: $seed")
-    val fmt = new javax.sound.sampled.AudioFormat(sampleRate.toFloat, 16, 1, true, false)
-    val pcm = new Array[Byte](nSamples * 2)
-    var i = 0
-    while (i < nSamples) {
-      val s =
-        if ((i / 320 + seed) % 3 == 0) {
-          val h1 = ((seed * 1000003L + i) * 2654435761L) & 0xffffffffL
-          val h2 = ((h1 ^ (h1 >> 16)) * 40503L) & 0xffffffffL
-          ((h2 >> 16) - 32768L).toInt
-        } else 0
-      pcm(2 * i) = (s & 0xff).toByte
-      pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      i += 1
-    }
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
-    baos.toByteArray
+    wavBytes(pcm16le(nSamples)(i => if ((i / 320 + seed) % 3 == 0) noiseSample(seed, i) else 0),
+      new AudioFormat(sampleRate.toFloat, 16, 1, true, false))
   }
 
   def synthBurstPcmWavUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
@@ -720,23 +724,15 @@ object Multimodal {
     * 8·32768 and frames ≤ 2^20 per payload keep the sum far inside a
     * long. None for undecodable bytes.
     */
-  def whtBandsInfo(bytes: Array[Byte]): Option[Seq[(Int, Long)]] = {
-    if (bytes == null || bytes.isEmpty) return None
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val fmt = ais.getFormat
-      if (fmt.getSampleSizeInBits != 16) return None
-      val data = ais.readAllBytes()
+  def whtBandsInfo(bytes: Array[Byte]): Option[Seq[(Int, Long)]] =
+    pcm16(bytes).map { case (fmt, data) =>
       val le = !fmt.isBigEndian
       val acc = new Array[Long](8)
       val frame = new Array[Int](8)
       var n = 0
       var i = 0
       while (i + 1 < data.length) {
-        val lo = data(if (le) i else i + 1) & 0xff
-        val hi = data(if (le) i + 1 else i)
-        frame(n) = (hi << 8) | lo
+        frame(n) = sample16(data, i, le)
         n += 1
         if (n == 8) {
           var k = 0
@@ -755,9 +751,8 @@ object Multimodal {
         }
         i += 2
       }
-      Some((0 until 8).map(k => (k, acc(k))))
-    } catch { case _: Exception => None }
-  }
+      (0 until 8).map(k => (k, acc(k)))
+    }
 
   def whtBands: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf { (bytes: Array[Byte]) =>

@@ -343,4 +343,120 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.vadSegments(df, $"doc_id".as("id"), $"wav",
       48, 40000000L, 2).count() == 0)
   }
+
+  // ---- the audio codec's cached providers ----------------------------------
+  import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+
+  private def noise(seed: Long, i: Int): Int = {
+    val h1 = ((seed * 1000003L + i) * 2654435761L) & 0xffffffffL
+    val h2 = ((h1 ^ (h1 >> 16)) * 40503L) & 0xffffffffL
+    ((h2 >> 16) - 32768L).toInt
+  }
+
+  /** `samples` as 16-bit signed PCM in `bigEndian` order, written by
+    * AudioSystem itself — the reference the cached providers must match. */
+  private def viaAudioSystem(samples: Seq[Int], tpe: AudioFileFormat.Type,
+      channels: Int = 1, bigEndian: Boolean = false): Array[Byte] = {
+    val pcm = samples.flatMap { s =>
+      val (hi, lo) = (((s >> 8) & 0xff).toByte, (s & 0xff).toByte)
+      if (bigEndian) Seq(hi, lo) else Seq(lo, hi)
+    }.toArray
+    val fmt = new AudioFormat(8000f, 16, channels, true, bigEndian)
+    val out = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt,
+      samples.length / channels), tpe, out)
+    out.toByteArray
+  }
+
+  test("audio codec: providers resolve once per JVM — no per-row service lookup") {
+    // AudioSystem scans META-INF/services through the context class loader
+    // on every call; the cached providers must never ask again. Counting
+    // javax.sound.midi too pins the reader order: in ServiceLoader's order
+    // SoftMidiAudioFileReader would try each WAV first and scan for MIDI
+    // providers per decode
+    val lookups = new java.util.concurrent.atomic.AtomicInteger()
+    val t = Thread.currentThread
+    val prev = t.getContextClassLoader
+    t.setContextClassLoader(new ClassLoader(prev) {
+      override def getResources(name: String): java.util.Enumeration[java.net.URL] = {
+        if (name.startsWith("META-INF/services/javax.sound.")) lookups.incrementAndGet()
+        super.getResources(name)
+      }
+    })
+    try {
+      assert(Multimodal.decodeAudioInfo(Multimodal.synthPcmWav(1L, 64)).isDefined) // first use
+      lookups.set(0)
+      (0 until 100).foreach { i =>
+        assert(Multimodal.decodeAudioInfo(Multimodal.synthNoisePcmWav(i.toLong, 64)).isDefined)
+      }
+      assert(lookups.get == 0, s"${lookups.get} provider lookups in 100 synth + 100 decode calls")
+    } finally t.setContextClassLoader(prev)
+  }
+
+  test("audio codec: AU and big-endian AIFF decode exactly as AudioSystem decodes them") {
+    val samples = (0 until 90).map(noise(11L, _))
+    val wavInfo = Multimodal.decodeAudioInfo(viaAudioSystem(samples, AudioFileFormat.Type.WAVE))
+    for ((tpe, be) <- Seq(AudioFileFormat.Type.AU -> true, AudioFileFormat.Type.AIFF -> true,
+        AudioFileFormat.Type.AU -> false, AudioFileFormat.Type.WAVE -> false)) {
+      val bytes = viaAudioSystem(samples, tpe, bigEndian = be)
+      val ref = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+      val Some((fmt, data)) = Multimodal.pcm16(bytes)
+      assert(fmt.toString == ref.getFormat.toString && fmt.matches(ref.getFormat), s"$tpe")
+      assert(java.util.Arrays.equals(data, ref.readAllBytes()), s"$tpe sample bytes")
+      // same samples, any container and byte order: the same witness
+      assert(Multimodal.decodeAudioInfo(bytes) == wavInfo, s"$tpe be=$be")
+    }
+    assert(Multimodal.pcm16(viaAudioSystem(samples, AudioFileFormat.Type.AIFF, bigEndian = true))
+      .get._1.isBigEndian, "the big-endian sample path is exercised")
+    // 8-bit PCM parses but is not 16-bit: None, like junk, empty and null
+    val pcm8 = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(new Array[Byte](40)),
+      new AudioFormat(8000f, 8, 1, true, false), 40), AudioFileFormat.Type.WAVE, pcm8)
+    assert(AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(pcm8.toByteArray)).getFormat.getSampleSizeInBits == 8)
+    Seq(pcm8.toByteArray, "junk".getBytes, Array.emptyByteArray, null)
+      .foreach(b => assert(Multimodal.pcm16(b).isEmpty))
+  }
+
+  test("audio codec: every synth writes AudioSystem's exact bytes") {
+    def ramp(seed: Long, n: Int) = (0 until n).map(i => (((seed * 31 + i * 7) % 65536) - 32768).toInt)
+    val W = AudioFileFormat.Type.WAVE
+    assert(Multimodal.synthPcmWav(1057L, 100) sameElements viaAudioSystem(ramp(1057L, 100), W))
+    assert(Multimodal.synthPcmWav(9L, 121, channels = 2) sameElements
+      viaAudioSystem(ramp(9L, 121), W, channels = 2))
+    assert(Multimodal.synthNoisePcmWav(42L, 700) sameElements
+      viaAudioSystem((0 until 700).map(noise(42L, _)), W))
+    assert(Multimodal.synthBurstPcmWav(4L, 1000) sameElements viaAudioSystem(
+      (0 until 1000).map(i => if ((i / 320 + 4L) % 3 == 0) noise(4L, i) else 0), W))
+  }
+
+  test("audio codec: decodes on 4 concurrent threads equal the sequential results") {
+    val wavs = (0 until 64).map(i => Multimodal.synthBurstPcmWav(i.toLong, 960 + 8 * i))
+    def decode(w: Array[Byte]) = (Multimodal.decodeAudioInfo(w),
+      Multimodal.decodeAudioWindowsInfo(w, 48), Multimodal.whtBandsInfo(w))
+    val sequential = wavs.map(decode)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, Any)]] {
+          def call(): Seq[(Int, Any)] = {
+            start.await()
+            // each thread walks the payloads from its own offset, and
+            // re-synthesizes half of them, so writers and readers overlap
+            (0 until 3 * wavs.length).map { k =>
+              val i = (k + 16 * t) % wavs.length
+              val w = if (k % 2 == 0) wavs(i)
+                else Multimodal.synthBurstPcmWav(i.toLong, 960 + 8 * i)
+              i -> decode(w)
+            }
+          }
+        })
+      }
+      start.countDown()
+      runs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS).foreach {
+        case (i, got) => assert(got == sequential(i), s"payload $i")
+      })
+    } finally pool.shutdownNow()
+  }
 }
