@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Dedup, Similarity}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.Locale
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
@@ -10,10 +12,131 @@ import graft.operators.{Corpus, Dedup, Similarity}
   * Each query is forced through the `noop` sink rather than `count()`:
   * count() lets Catalyst prune away the projected columns, which would
   * benchmark a cheaper plan than the one users run.
+  *
+  * Bench measures and records; it does not grade. The stdout line carries
+  * per-query seconds only; `bench_out.json` adds the raw passes, the chosen
+  * pass's GC time and a raw `regressions` list for a reader to judge.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (testdata), `SPARK_GRAFT_BENCH_ONLY`
+  * (comma-separated query-name prefixes, e.g. `q02,q37_emb_pairs`; a full
+  * name is its own prefix), `SPARK_GRAFT_BENCH_OUT` (artifact path,
+  * default `bench_out.json`). `SPARK_GRAFT_CPUS` is read by [[Engine.create]].
   */
 object Bench {
-  // Throttled full-GC nudge shared by the per-query loop and the scale
-  // section (rationale at the per-query call site).
+  /** One timed pass: elapsed seconds, whether it succeeded, and the
+    * stop-the-world GC milliseconds that landed inside it.
+    */
+  private[graft] final case class Pass(sec: Double, ok: Boolean, gcMs: Long)
+
+  /** The official pass of a query: the fastest SUCCESSFUL pass, or pass 1
+    * when none succeeded (the query then lands in `failed`). A failed
+    * pass never substitutes its time: its fast-failure elapsed (or the
+    * watchdog cap) is not a measurement. On a tie the later pass wins.
+    */
+  private[graft] def official(passes: Seq[Pass]): Pass =
+    passes.filter(_.ok).reduceLeftOption((a, b) => if (a.sec < b.sec) a else b)
+      .getOrElse(passes.head)
+
+  /** Passes as recorded in `bench_out.json`: failed passes negated
+    * (sign = pass_ok), so min(passes >= 0) always equals the official time.
+    */
+  private[graft] def signedPasses(passes: Seq[Pass]): Seq[Double] =
+    passes.map(p => if (p.ok) p.sec else -p.sec)
+
+  /** A query more than 1.5x AND more than 1 s slower than a reference
+    * time: the previous round or the best of all committed rounds. Raw:
+    * nothing is re-measured, labelled or allowlisted.
+    */
+  private[graft] final case class Regression(q: String, prev: Option[Double],
+      best: Option[Double], now: Double)
+
+  private def trips(ref: Option[Double], t: Double): Boolean =
+    ref.exists(r => t > r * 1.5 && t - r > 1.0)
+
+  /** Round artifacts carry SHORT keys (the stdout line's qNN prefixes);
+    * `bench_out.json` carries full names, so look a query up under both.
+    */
+  private def lookup(m: Map[String, Double], name: String): Option[Double] =
+    m.get(name).orElse(m.get(shortKey(name)))
+
+  private[graft] def regressions(results: Seq[(String, Double)],
+      prev: Map[String, Double], best: Map[String, Double]): Seq[Regression] =
+    results.flatMap { case (name, t) =>
+      val p = lookup(prev, name)
+      val b = lookup(best, name)
+      if (trips(p, t) || trips(b, t)) Some(Regression(name, p, b, t)) else None
+    }
+
+  /** The `"queries":{...}` map of a bench artifact: `bench_out.json`, or a
+    * round artifact that embeds the stdout line as an escaped JSON string.
+    */
+  private[graft] def timesIn(text: String): Map[String, Double] =
+    """"queries":\{([^}]*)\}""".r.findFirstMatchIn(text.replace("\\\"", "\""))
+      .fold(Map.empty[String, Double]) { g =>
+        """"([^"]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(g.group(1))
+          .map(p => p.group(1) -> p.group(2).toDouble).toMap
+      }
+
+  private def timesFrom(path: String): Map[String, Double] =
+    try timesIn(new String(Files.readAllBytes(Paths.get(path)), UTF_8))
+    catch { case _: Exception => Map.empty }
+
+  private[graft] def shortKey(name: String): String = name.takeWhile(_ != '_')
+
+  private def f2(d: Double): String = "%.2f".formatLocal(Locale.ROOT, d)
+  private def f3(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
+  private def strs(xs: Iterable[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The driver keeps only the LAST 2000 chars of stdout, and sbt appends a
+    * "[success] Total time" line (~75 chars) after ours.
+    */
+  private[graft] val StdoutBudget = 1850
+
+  /** The stdout line: short keys at 2 decimals. When the full map does not
+    * fit [[StdoutBudget]], the slowest queries that fit are kept, with
+    * `queries_shown`; the full-precision map lives in `bench_out.json`.
+    */
+  private[graft] def stdoutLine(results: Seq[(String, Double)],
+      failed: Seq[String], sfDir: String): String = {
+    val total = results.map(_._2).sum
+    val core44 = core44Total(results)
+    def line(shown: Seq[(String, Double)], truncated: Boolean): String = {
+      val qj = shown.sortBy(_._1)
+        .map { case (k, v) => "\"" + shortKey(k) + "\":" + f2(v) }.mkString("{", ",", "}")
+      val trunc =
+        if (truncated) s""","queries_shown":${shown.size},"queries_full":"bench_out.json""""
+        else ""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","core44_r01_set":${f3(core44)},"n_queries":${results.size},"queries":$qj,"failed":${strs(failed)},"sf":"$sfDir"$trunc}"""
+    }
+    val full = line(results, truncated = false)
+    if (full.length <= StdoutBudget) full
+    else {
+      val bySlow = results.sortBy(-_._2)
+      (bySlow.size to 1 by -1).iterator.map(k => line(bySlow.take(k), truncated = true))
+        .find(_.length <= StdoutBudget)
+        .getOrElse(line(bySlow.take(1), truncated = true))
+    }
+  }
+
+  private val Core44 = "q(\\d\\d)_.*".r
+
+  /** Subtotal over the round-1 query set (q01-q44): the grand total is not
+    * comparable across rounds because the query surface grows, this is.
+    */
+  private def core44Total(results: Seq[(String, Double)]): Double =
+    results.collect { case (Core44(n), t) if n.toInt >= 1 && n.toInt <= 44 => t }.sum
+
+  /** Per-query watchdog cap: a wedged query costs its own entry, never
+    * the run's artifact.
+    */
+  private val CapSec = 120L
+
+  // Throttled full-GC nudge: one forced full GC on a large heap costs
+  // ~0.3-0.5 s of wall, and one per pass (~830 a run) was the largest
+  // block of untimed harness time in r13. One nudge per ~15 s still keeps
+  // a query's allocation debt from surfacing as a pause inside a
+  // NEIGHBOR's timed pass; what lands inside a pass shows in `gc_ms`.
   private val lastGcNudge = new java.util.concurrent.atomic.AtomicLong(0L)
   private def maybeGc(): Unit = {
     val now = System.nanoTime()
@@ -23,9 +146,19 @@ object Bench {
     }
   }
 
+  // Cumulative stop-the-world GC time across all collectors; its delta
+  // over a pass tells an in-run GC stall from a plan change.
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // the ~15 queries whose contract includes a write (format round-trips,
     // streaming stores, compaction) would otherwise measure the box's disk
     // alongside the operator; opt out by setting SPARK_GRAFT_SCRATCH (or
@@ -35,33 +168,17 @@ object Bench {
     // Warm the JVM/codegen paths once so per-query numbers measure the
     // engine, not first-call classloading.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // Two passes per query, report the MIN: pass 1 pays plan + janino
-    // codegen compilation (driver-side, amortized to zero at 100 TB) so
-    // pass 2 normally wins; when run-context noise lands inside pass 2,
-    // pass 1 caps it. Raw passes are recorded in the artifact.
-    // Optional comma-separated query-name filter for focused A/B runs
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=q33_minhash_lsh,q37_emb_pairs).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val prefixes = sys.env.get("SPARK_GRAFT_BENCH_PREFIX")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected0 = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
-    val selected = prefixes.fold(selected0)(ps =>
-      selected0.filter(kv => ps.exists(kv._1.startsWith)))
-    // Failures are caught per-query so one bad query can't kill the run —
-    // but they must be machine-visible, not just stderr noise: a failed
-    // query's "time" is a fast no-op and silently flatters the total
-    // (this hid a guard bug for a full round). Collected into the JSON.
+    val selected = only.fold(SparkEntry.queries)(ps =>
+      SparkEntry.queries.filter(kv => ps.exists(kv._1.startsWith)))
+    // Failures are caught per-query so one bad query can't kill the run,
+    // and listed in `failed`: a failed query's "time" is a fast no-op that
+    // would otherwise silently flatter the total.
     val failedQueries = scala.collection.mutable.LinkedHashSet[String]()
-    // Per-query watchdog: a wedged query (runaway plan, interpreted-eval
-    // blowup) must cost its own entry, never the round's whole artifact —
-    // round 7's bench died rc=124 because one query ran unbounded. Each
-    // run executes under its own job group with interruptOnCancel; a timer
-    // cancels the group after the cap, the noop save throws, and the query
-    // lands in `failed` with a "(timeout)" marker. Driver-side planning
-    // wedges are not cancellable this way, but every observed wedge so far
-    // has been executor-side.
-    val benchCapSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP_SEC", "120").toLong
+    // Each pass runs under its own job group with interruptOnCancel; a
+    // timer cancels the group after the cap, the noop save throws, and the
+    // query lands in `failed` with a "(timeout)" marker. Driver-side
+    // planning wedges are not cancellable this way, but every observed
+    // wedge so far has been executor-side.
     val watchdog = new java.util.Timer("bench-watchdog", true)
     def guarded(name: String)(body: => Unit): Boolean = {
       val group = s"bench-$name"
@@ -70,967 +187,85 @@ object Bench {
       val task = new java.util.TimerTask {
         def run(): Unit = {
           timedOut.set(true)
-          System.err.println(s"[bench] $name exceeded ${benchCapSec}s — cancelling job group")
+          System.err.println(s"[bench] $name exceeded ${CapSec}s — cancelling job group")
           // AndFutureJobs: cancelJobGroup only kills in-flight jobs — an
           // iterative query between jobs on the driver (count/checkpoint
-          // loops) would sail past a plain cancel and run unbounded, the
-          // exact rc=124 mode this watchdog exists to prevent
+          // loops) would sail past a plain cancel and run unbounded
           spark.sparkContext.cancelJobGroupAndFutureJobs(group)
         }
       }
-      watchdog.schedule(task, benchCapSec * 1000L)
-      val ok =
-        try { body; true }
-        catch {
-          case e: Throwable =>
-            failedQueries += (if (timedOut.get) s"$name(timeout)" else name)
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        } finally {
-          task.cancel()
-          spark.sparkContext.clearJobGroup()
-        }
-      ok
+      watchdog.schedule(task, CapSec * 1000L)
+      try { body; true }
+      catch {
+        case e: Throwable =>
+          failedQueries += (if (timedOut.get) s"$name(timeout)" else name)
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+      } finally {
+        task.cancel()
+        spark.sparkContext.clearJobGroup()
+      }
     }
-    // Cumulative stop-the-world GC time across all collectors: the delta
-    // over a timed pass attributes an in-run spike to GC debt vs a plan
-    // change from the artifact alone (a rehearsal caught a ~90 s full-GC
-    // stall landing inside one measured pass — without this column that
-    // reads as a 9x operator regression).
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-    // Throttled full-GC nudge: the per-pass System.gc() existed to keep one
-    // query's allocation debt from surfacing as a multi-second pause inside
-    // a NEIGHBOR's timed pass, but a forced full GC on a 24 GB heap costs
-    // ~0.3-0.5 s of wall per call and the bench made ~830 of them (~2x414)
-    // — measured r13: ~0.9 s/query of untimed harness overhead, the single
-    // largest block of bench wall-clock after the queries themselves, and
-    // the reason the official run ran against the driver's time budget.
-    // One nudge per ~15 s keeps the debt bounded at a few queries' worth
-    // (the gc_ms column + warmth/gc self-attribution already absorb what
-    // lands inside a pass) at ~1/7th the calls.
     def onePass(name: String,
-        fn: (SparkSession, String) => DataFrame): (Double, Boolean, Long) = {
+        fn: (SparkSession, String) => DataFrame): Pass = {
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       val ok = guarded(name) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      val t = (System.nanoTime() - t0) / 1e9
-      val gcMs = gcMillis() - gc0
-      // Drop anything the query persisted (e.g. minhash doc state), outside
-      // the timed region: pass 2 must rebuild it (cache reuse would hide
-      // real compute — Spark's CacheManager matches canonicalized plans),
-      // and later queries must not run under this query's cache pressure.
+      val pass = Pass((System.nanoTime() - t0) / 1e9, ok, gcMillis() - gc0)
+      // Drop anything the query persisted, outside the timed region: pass 2
+      // must rebuild it (Spark's CacheManager matches canonicalized plans,
+      // so reuse would hide real compute), and later queries must not run
+      // under this query's cache pressure.
       spark.catalog.clearCache()
-      // Nudge the context cleaner: broadcast/shuffle remnants from ~90
-      // prior query runs otherwise surface as a multi-second full-GC pause
-      // attributed to whichever query it lands on. Throttled — see maybeGc.
       maybeGc()
-      (t, ok, gcMs)
+      pass
     }
-    // Raw per-pass times and the GC time of the CHOSEN pass ride the
-    // full-precision artifact so the measurement protocol is auditable.
-    val rawPasses = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val gcOfChosen = scala.collection.mutable.LinkedHashMap[String, Long]()
-    var results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // progress marker: when a query wedges (e.g. a driver-side planning
-      // blowup), the LAST start line names the culprit — without it a
-      // silent 45-minute hang is undiagnosable
+    // Two passes per query; the official time is the min (see `official`):
+    // pass 1 pays plan + janino codegen, so pass 2 normally wins, and when
+    // run-context noise lands inside pass 2, pass 1 caps it. Pass 2 is
+    // skipped after a failed pass 1: re-running a wedged query would
+    // double its cap cost for no information.
+    val timed = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // progress marker: when a query wedges, the LAST start line names it
       System.err.println(s"[bench] start $name")
-      val (t1, ok1, gc1) = onePass(name, fn)
-      // skip pass 2 after a failed/timed-out pass 1: re-running a wedged
-      // query would double its cap cost for no information
-      // FAILED passes ride `passes` NEGATED (-elapsed): a failure's
-      // fast-failure elapsed is not a measurement, and an unmarked one
-      // would make min(passes) disagree with the official `queries` entry
-      // (which only ever keeps successful-pass times). Sign = pass_ok.
-      val t =
-        if (!ok1) { rawPasses(name) = Seq(-t1); gcOfChosen(name) = gc1; t1 }
-        else {
-          val (t2, ok2, gc2) = onePass(name, fn)
-          rawPasses(name) = Seq(t1, if (ok2) t2 else -t2)
-          // Official time is min-of-2: pass 1 pays plan + janino codegen
-          // (driver-side, amortized to zero at 100 TB) so pass 2 normally
-          // wins — but when run-context noise (GC debt, page-cache state
-          // from ~400 neighbors) lands inside pass 2, pass 1 caps it.
-          // r10's official total read +12% vs a same-code rehearsal purely
-          // from such noise; min-of-2 makes round-over-round totals
-          // readable. A failed pass 2 never substitutes its time — its
-          // fast-failure elapsed would poison the best-of-rounds ratchet
-          // (and a timeout would record the watchdog cap); pass 1's real
-          // success time is the official number, the query still lands in
-          // `failed`.
-          if (!ok2) { gcOfChosen(name) = gc1; t1 }
-          else if (t1 < t2) { gcOfChosen(name) = gc1; t1 }
-          else { gcOfChosen(name) = gc2; t2 }
-        }
-      name -> t
+      val p1 = onePass(name, fn)
+      name -> (if (p1.ok) Seq(p1, onePass(name, fn)) else Seq(p1))
     }
-    // Prev source priority: explicit SPARK_GRAFT_BENCH_PREV, then the
-    // bench_out.json this run overwrites, then the newest committed
-    // BENCH_r*.json round artifact — bench_out.json is gitignored and the
-    // round harness may start from a clean tree, so without the artifact
-    // fallback the official per-round run would never carry the field.
-    val prevPath: Option[String] =
-      sys.env.get("SPARK_GRAFT_BENCH_PREV")
-        .orElse(Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
-          .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
-        .orElse {
-          val rounds = Option(new java.io.File(".").listFiles()).toSeq.flatten
-            .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-          if (rounds.isEmpty) None
-          else Some(rounds.maxBy(f =>
-            f.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt).getPath)
-        }
-    def timesFrom(path: String): Map[String, Double] =
-      try {
-        val raw = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-        // round artifacts embed the bench stdout line inside a JSON "tail"
-        // string — unescape so the same queries-map regex finds it there
-        val txt = raw.replace("\\\"", "\"")
-        val m = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-        m.fold(Map.empty[String, Double]) { g =>
-          """"([^"]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(g.group(1))
-            .map(p => p.group(1) -> p.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
-    val prevTimes: Map[String, Double] =
-      prevPath.fold(Map.empty[String, Double])(timesFrom)
-    // Best-of-rounds floor: a slow leak in +0.3 s steps never trips the
-    // 1.5x prev-round filter — each step is under it BY CONSTRUCTION
-    // (q222 drifted r6 5.96 s -> r9 7.72 s invisibly). Flag against the
-    // min across every committed round artifact too, so multi-round
-    // drift surfaces even when each round is individually quiet.
-    val bestTimes: Map[String, Double] = {
-      val rounds = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .filter(_.getName.matches("BENCH_r\\d+\\.json")).map(_.getPath)
-      rounds.map(timesFrom).foldLeft(Map.empty[String, Double]) { (acc, m) =>
-        (acc.keySet ++ m.keySet).iterator.map(k => k -> math.min(
-          acc.getOrElse(k, Double.MaxValue),
-          m.getOrElse(k, Double.MaxValue))).toMap
-      }
-    }
-    // round artifacts carry SHORT keys (the stdout line's qNN prefixes);
-    // full-precision bench_out.json carries full names — look up both
-    def lookup(m: Map[String, Double], name: String): Option[Double] =
-      m.get(name).orElse(m.get(name.takeWhile(_ != '_')))
-    def prevOf(name: String): Option[Double] = lookup(prevTimes, name)
-    // Accepted-regressions allowlist: the best-of-rounds floor is a
-    // permanent ratchet over every committed BENCH_r*.json, so a
-    // deliberate, attributed slowdown would be re-flagged forever and
-    // burn one of the 12 severity-ordered re-measure slots each run.
-    // Entries raise that query's best-of floor to the rebaselined value;
-    // the prev-round comparison is untouched (a further slowdown past the
-    // accepted level still flags). Each entry cites its README attribution.
-    val acceptedFloors: Map[String, Double] = Map(
-      // r10: q25 describe moved to the exact interpolated-percentile
-      // independent DuckDB oracle — the deliberate cost is attributed in
-      // README (best-of 1.19 s predates the exact oracle; approx siblings
-      // q147/q148 are the 100 TB path). Rebaselined to its r9 prev.
-      "q25" -> 2.75,
-      // r11: q142 attributed as JVM-warmth variance, not a plan change
-      // (README "q142"): fresh-JVM min-of-3 focused runs measured
-      // 3.64/5.98/6.36 s on the committed tree; within one JVM reps decay
-      // 9.4 -> 2.4 s with the plan bit-identical to r9 (the r10 IVF
-      // commits only added an optional centroids parameter, unused by
-      // q142) and the exact broadcast sibling q117 at 4.18 s in-run. The
-      // 2.53 s all-time best is a maximally-warm JVM, not the typical
-      // cost; floor set so only beyond-band times (> 6.75 s) re-flag.
-      "q142" -> 4.5
-    )
-    def bestOf(name: String): Option[Double] = {
-      val floor = acceptedFloors.get(name.takeWhile(_ != '_'))
-      lookup(bestTimes, name).map(b => floor.fold(b)(f => math.max(b, f)))
-    }
-    def trips(ref: Option[Double], t: Double): Boolean =
-      ref.exists(p => t > p * 1.5 && t - p > 1.0)
-    def isRegression(name: String, t: Double): Boolean =
-      trips(prevOf(name), t) || trips(bestOf(name), t)
-    // Re-measure before flagging: a full run's per-query time carries
-    // multi-second run-context noise (GC debt, page-cache state from ~400
-    // neighbors — measured: 6 of 6 flagged queries in one full run were
-    // at their prior time when re-run focused). Each tentatively-flagged
-    // query gets ONE extra pass and reports the min; real regressions
-    // reproduce, noise doesn't. Bounded to 12 re-runs so a systemic
-    // slowdown (e.g. a config regression slowing everything) degrades to
-    // flagging at pass-2 numbers instead of doubling the run.
-    // severity-ordered: the 12 bonus slots go to the WORST now/ref ratios
-    // first — alphabetical order once spent the whole cap on 1.5-2x flags
-    // while a 10x GC-stall spike (q304, 96 s in-run vs 10 s focused) never
-    // got its re-measure
-    def worstRatio(n: String, t: Double): Double =
-      (prevOf(n).toSeq ++ bestOf(n).toSeq).map(r => t / r).maxOption.getOrElse(1.0)
-    val tentative = results.filter { case (n, t) => isRegression(n, t) }
-      .sortBy { case (n, t) => -worstRatio(n, t) }
-    val remeasuredNames = tentative.take(12).map(_._1)
-    // queries whose bonus pass actually SUCCEEDED — the artifact's
-    // remeasured_min_of_3 must list only these: a discarded (failed)
-    // bonus pass leaves the recorded time min-of-2, and claiming a
-    // 3-pass protocol for it would misreport the measurement
-    var remeasuredOk: Seq[String] = Seq.empty
-    if (tentative.nonEmpty) {
-      // The re-measure is a BONUS pass: a timeout/flake here must not mark
-      // an officially-passing query as failed (both official passes
-      // succeeded), so failedQueries is snapshotted and restored — the
-      // extra pass can only improve the reported time, never the verdict.
-      val failedSnapshot = failedQueries.toSet
-      val remeasured = remeasuredNames.flatMap { n =>
-        System.err.println(s"[bench] re-measuring tentatively flagged $n")
-        // only an OK re-measure may substitute its time: a fast failure
-        // (exception/timeout caught after 0.5 s) would otherwise replace
-        // an officially-passing query's time with the failure's elapsed,
-        // under-reporting the artifact and silently un-flagging a genuine
-        // regression
-        val (rt, rok, rgc) = onePass(n, selected(n))
-        if (rok) Some(n -> (rt, rgc)) else None
-      }.toMap
-      remeasuredOk = remeasuredNames.filter(remeasured.contains)
-      failedQueries.filterInPlace(failedSnapshot.contains)
-      results = results.map { case (n, t) =>
-        remeasured.get(n) match {
-          case Some((rt, rgc)) if rt < t =>
-            rawPasses(n) = rawPasses.getOrElse(n, Seq.empty) :+ rt
-            gcOfChosen(n) = rgc
-            n -> rt
-          case Some((rt, _)) =>
-            rawPasses(n) = rawPasses.getOrElse(n, Seq.empty) :+ rt
-            n -> t
-          case None => n -> t
-        }
-      }
-    }
-    // ---- warmth/GC self-attribution for surviving flags -------------------
-    // The best-of-rounds ratchet records each query at maximum observed JVM
-    // warmth, so mixed-warmth full runs trip ~7 transient flags per run
-    // whose `passes` already show the q142 decay signature (pass 1 >> best
-    // pass, same JVM). Each used to cost a manual fresh-JVM focused study;
-    // the bench now self-attributes each surviving flag, machine-readable
-    // in its regressions entry:
-    //   "gc"         — the chosen pass's stop-the-world GC time covers
-    //                  >= 60% of the overshoot past the tripped reference
-    //                  (and >= 0.5 s absolute): run-context GC debt.
-    //   "warmth"     — successful passes decay >= 1.4x from pass 1 to the
-    //                  best pass AND one extra same-JVM pass confirms the
-    //                  descent (lands <= prior best * 1.1): C2 warmth, not
-    //                  a plan change. The extra pass is a real measurement
-    //                  — recorded in `passes`, allowed to substitute the
-    //                  min (which may un-flag the query entirely).
-    //   "box"        — the whole RUN is uniformly slower than the best-of
-    //                  anchors (same-code r13 measurements: min-sum 330 s
-    //                  and 459 s an hour apart; per-query median ratio vs
-    //                  best 1.35x) and this flag's own ratio sits inside
-    //                  the run's 90th-percentile ratio — indistinguishable
-    //                  from run-context box speed, not a per-query change.
-    //                  Only engages when the run median is >= 1.15x (a
-    //                  fast run's p90 is ~1.1, so a genuine 1.5x+ per-query
-    //                  regression there still reads "reproduced"); the
-    //                  median/p90 evidence rides the artifact as
-    //                  run_speed_vs_best / run_speed_p90_vs_best.
-    //   "reproduced" — no signature held: a human should look.
-    // Bounded to 8 extra passes; unattributed overflow falls through to
-    // the box/reproduced rules.
-    // ratio distribution vs the best-of anchors, over queries big enough
-    // that the ratio is signal (>= 0.2 s reference; below that the
-    // per-query floor's jitter dominates)
-    val runRatios = results.flatMap { case (n, t) =>
-      bestOf(n).filter(_ >= 0.2).map(b => t / b)
-    }.sorted
-    val runMedianRatio =
-      if (runRatios.isEmpty) 1.0 else runRatios(runRatios.size / 2)
-    val runP90Ratio =
-      if (runRatios.isEmpty) 1.0
-      else runRatios(math.min(runRatios.size - 1, (runRatios.size * 9) / 10))
-    val attributions = scala.collection.mutable.LinkedHashMap[String, String]()
-    if (prevTimes.nonEmpty || bestTimes.nonEmpty) {
-      // same discipline as the re-measure bonus pass: an extra-pass
-      // timeout/flake must not mark an officially-passing query failed
-      val failedSnapshot2 = failedQueries.toSet
-      var extraBudget = 8
-      results = results.map { case (name, t) =>
-        if (!isRegression(name, t)) name -> t
-        else {
-          val okPasses = rawPasses.getOrElse(name, Seq.empty).filter(_ >= 0)
-          val refMin = (prevOf(name).toSeq ++ bestOf(name).toSeq)
-            .filter(r => trips(Some(r), t)).minOption
-          val overshootMs = refMin.fold(0.0)(r => (t - r) * 1000.0)
-          val gcMs = gcOfChosen.getOrElse(name, 0L).toDouble
-          if (gcMs >= 0.6 * overshootMs && gcMs >= 500.0) {
-            attributions(name) = "gc"
-            name -> t
-          } else if (okPasses.nonEmpty && okPasses.head >= okPasses.min * 1.4 &&
-              extraBudget > 0) {
-            extraBudget -= 1
-            System.err.println(s"[bench] warmth-check extra pass for $name")
-            val (et, eok, egc) = onePass(name, selected(name))
-            rawPasses(name) = rawPasses(name) :+ (if (eok) et else -et)
-            val newT = if (eok && et < t) { gcOfChosen(name) = egc; et } else t
-            attributions(name) =
-              if (eok && et <= okPasses.min * 1.1) "warmth"
-              else if (runMedianRatio >= 1.15 &&
-                refMin.exists(r => newT / r <= runP90Ratio)) "box"
-              else "reproduced"
-            name -> newT
-          } else if (runMedianRatio >= 1.15 &&
-              refMin.exists(r => t / r <= runP90Ratio)) {
-            attributions(name) = "box"
-            name -> t
-          } else {
-            attributions(name) = "reproduced"
-            name -> t
-          }
-        }
-      }
-      failedQueries.filterInPlace(failedSnapshot2.contains)
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Round-over-round comparability: the query surface grows every round,
-    // so the grand total is not comparable to earlier rounds' totals. This
-    // subtotal covers exactly the round-1 query set (q01-q44) — the number
-    // to hold against BENCH_r01's 31.0 s and the BASELINE 2x gate.
-    val core44 = results.filter { case (k, _) =>
-      k.take(3).drop(1).forall(_.isDigit) && {
-        val n = k.slice(1, 3).toInt; n >= 1 && n <= 44 && k.charAt(3) == '_'
-      }
-    }.map(_._2).sum
+    val chosen = timed.map { case (n, ps) => n -> official(ps) }
+    val results = chosen.map { case (n, p) => n -> p.sec }
+    val failed = failedQueries.toSeq
 
-    // ---- dedup/ANN at >=100k docs/embeddings --------------------------------
-    // The per-query section above runs the driver contract at the sf's
-    // native table sizes (5k docs / 2k embeddings at sf0.1) — toy scale for
-    // the dedup/ANN pitch. This section scales the corpora to 100k rows
-    // (deterministic variants of the sf tables) and measures the LSH family
-    // (linear candidate generation) against the exact pairwise family
-    // (quadratic by construction) across doubling sizes, so the scale story
-    // is data, not comments. Disable with SPARK_GRAFT_SCALE_BENCH=0.
-    // Default OFF below 16 cores: the curves are a full-parallelism
-    // artifact whose signal is growth RATIOS across sizes — the driver's
-    // low-core rerun exists to measure per-query CPU scaling via `queries`,
-    // and repeating the ~8-minute sweep there doubles that run's wall for
-    // no new ratio (r12's low-core official run hit the driver's time
-    // budget). SPARK_GRAFT_SCALE_BENCH=1 forces it back on at any width.
-    val fullWidth = cpus.toIntOption.exists(_ >= 16)
-    val scaleJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_BENCH",
-          if (fullWidth) "1" else "0") == "1")
-        "," + scaleBench(spark, sfDir)
-      else ""
-
-    // ---- heavy-pair-generator attribution (untimed) ----------------------
-    // q304 and q222 are the two most expensive per-query entries; a slow
-    // pair generator is only diagnosable next to its work volume (is the
-    // DATA producing this many candidates, or did the PLAN degrade?).
-    // Counted on the exact frames the queries join; skipped in focused
-    // runs (the counters are full-surface artifact furniture).
-    val attribJson =
-      if (only.isEmpty && prefixes.isEmpty &&
-          sys.env.getOrElse("SPARK_GRAFT_ATTRIB",
-            if (fullWidth) "1" else "0") == "1") {
-        try {
-          val vecs = SparkEntry.tfidfBigramVecs(spark, sfDir)
-          val c304 = Dedup.sparseCosineCandidates(vecs).count()
-          val o304 = Dedup.sparseCosinePairs(vecs, 300).count()
-          spark.catalog.clearCache()
-          val docs = Engine.table(spark, sfDir, "documents")
-            .select(col("doc_id"),
-              array_distinct(graft.functions.TextFns.tokens(col("text"))).as("tk"))
-          val (cand222, handles) = Dedup.ppJoinCandidates(
-            docs, col("doc_id"), col("tk"), tPpm = 900000L)
-          val c222 = cand222.count()
-          handles.foreach(_.unpersist())
-          val o222 = Dedup.ppJoinPairs(
-            docs, col("doc_id"), col("tk"), tPpm = 900000L).count()
-          spark.catalog.clearCache()
-          s""","attribution":{"q304_cand":$c304,"q304_out":$o304,"q222_cand_groups":$c222,"q222_out":$o222}"""
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] attribution counters failed: ${e.getMessage}")
-            ""
-        }
-      } else ""
-
-    val failedJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Round-over-round diff: the q169 r6->r8 3.7x drift was only visible
-    // because a human diffed two JSON artifacts. Emit a `regressions`
-    // array of queries >1.5x their prior time (and >1s abs, so
-    // 0.3s->0.5s jitter doesn't spam) that SURVIVED the focused
-    // re-measure above — the artifact carries the comparison the judge
-    // had to do by hand, with run-context noise already filtered out.
-    // each surviving entry names BOTH reference points — prev round and
-    // best-of-rounds — so the reader sees single-round spikes and
-    // multi-round drift in one place; `null` = no prior observation
-    def refJson(v: Option[Double]): String = v.fold("null")(_.toString)
-    // each entry carries the chosen pass's GC time so an in-run spike
-    // self-attributes as GC debt vs a plan change from the artifact alone
-    // each surviving entry also carries its machine-readable `attribution`
-    // ("gc" | "warmth" | "reproduced" — see the self-attribution pass
-    // above), so a transient flag dismisses itself in the artifact instead
-    // of costing a manual fresh-JVM study next round
-    def attrJson(name: String): String =
-      attributions.get(name).fold("")(a => s""","attribution":"$a"""")
-    val regressions = results.collect {
-      case (name, t) if isRegression(name, t) =>
-        s"""{"q":"$name","prev":${refJson(prevOf(name))},"best":${refJson(bestOf(name))},"now":$t,"gc_ms":${gcOfChosen.getOrElse(name, 0L)}${attrJson(name)}}"""
-    }
+    // Reference times for the raw `regressions` list: the previous round is
+    // the artifact this run overwrites, else the newest committed
+    // BENCH_r*.json; best-of-rounds is the min over every committed round.
+    val rounds = Option(new java.io.File(".").listFiles()).toSeq.flatten
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+      .sortBy(_.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
+    val prevPath = Some(outPath).filter(p => Files.exists(Paths.get(p)))
+      .orElse(rounds.lastOption.map(_.getPath))
+    val prev = prevPath.fold(Map.empty[String, Double])(timesFrom)
+    val best = rounds.map(f => timesFrom(f.getPath))
+      .foldLeft(Map.empty[String, Double]) { (acc, m) =>
+        m.foldLeft(acc) { case (a, (k, v)) => a.updated(k, a.get(k).fold(v)(math.min(_, v))) }
+      }
+    def ref(v: Option[Double]): String = v.fold("null")(_.toString)
     val regressionsJson =
-      if (prevTimes.isEmpty && bestTimes.isEmpty) "" // first run: omit
-      else s""","regressions":${regressions.mkString("[", ",", "]")}"""
-    // flagged queries report min-of-3 (two official passes + the bonus
-    // re-measure) where everything else reports pass-2 — the substitution
-    // is recorded so the artifact's measurement protocol is explicit
-    val remeasuredJson =
-      if (remeasuredOk.isEmpty) ""
-      else s""","remeasured_min_of_3":${remeasuredOk.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    // raw passes (2 official + optional re-measure) and per-query GC time
-    // of the chosen pass — full-precision artifact only (stdout budget)
-    val passesJson = rawPasses.map { case (k, ps) =>
-      "\"" + k + "\":" + ps.map(p =>
-        "%.3f".formatLocal(java.util.Locale.ROOT, p)).mkString("[", ",", "]")
+      if (prev.isEmpty && best.isEmpty) "" // first run: nothing to compare
+      else regressions(results, prev, best).map(r =>
+        s"""{"q":"${r.q}","prev":${ref(r.prev)},"best":${ref(r.best)},"now":${r.now}}""")
+        .mkString(""","regressions":[""", ",", "]")
+
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val passesJson = timed.map { case (k, ps) =>
+      "\"" + k + "\":" + signedPasses(ps).map(f3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val gcJson = gcOfChosen.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // run-level speed vs the best-of anchors: the evidence behind any
-    // "box" attributions (and the number that tells a reader whether this
-    // run landed in a fast or slow box phase before comparing totals)
-    def fr(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    val runSpeedJson =
-      if (runRatios.isEmpty) ""
-      else s""","run_speed_vs_best":${fr(runMedianRatio)},"run_speed_p90_vs_best":${fr(runP90Ratio)}"""
+    val gcJson = chosen.map { case (k, p) => "\"" + k + "\":" + p.gcMs }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"per-query min of 2 official passes (plus bonus re-measure for flagged queries); raw passes in `passes`, failed passes negated (sign = pass_ok, excluded from the min)","core44_r01_set":$core44,"queries":$qs,"passes":$passesJson,"gc_ms":$gcJson,"failed":$failedJson,"sf":"$sfDir"$runSpeedJson$regressionsJson$remeasuredJson$attribJson$scaleJson}"""
-    // Full-precision JSON (with the scale section) goes to a file the driver
-    // can read verbatim — sbt prefixes stdout with [info] noise.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // The stdout line must survive the driver's bounded tail capture intact.
-    // Measured from BENCH_r04.json: the capture is the LAST 2000 chars of
-    // stdout, and sbt appends a "[success] Total time" line (~75 chars) after
-    // ours — so the line must stay under ~1850 chars or its head is cut off
-    // ("parsed": null in r2 and r4). 141 full query names at 3 decimals is
-    // ~4 KB, hence: short keys (the unique qNN prefix), 2 decimals, and a
-    // deterministic slowest-first trim if the surface ever outgrows even
-    // that. Full-precision full-name map lives in bench_out.json.
-    def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def shortKey(k: String): String = k.takeWhile(_ != '_')
-    def line(qpairs: Seq[(String, Double)], truncated: Boolean): String = {
-      val qj = qpairs.map { case (k, v) => "\"" + shortKey(k) + "\":" + f2(v) }.mkString("{", ",", "}")
-      val trunc = if (truncated) s""","queries_shown":${qpairs.size},"queries_full":"bench_out.json"""" else ""
-      // regressions ride the stdout line too (short keys): the driver's
-      // artifact captures stdout's tail, and the whole point is that a
-      // round-over-round drift is visible IN the artifact. Capped at the
-      // 8 WORST now/ref ratios: a noisy run once tripped 39 flags whose
-      // JSON crowded the per-query map out of the byte budget entirely
-      // (queries_shown fell to 1) — the full list always rides
-      // bench_out.json, and `regressions_total` says when it was cut.
-      val regs = if (prevTimes.isEmpty && bestTimes.isEmpty) "" else {
-        val flagged = results.filter { case (n, tq) => isRegression(n, tq) }
-        val shown = flagged.sortBy { case (n, tq) => -worstRatio(n, tq) }.take(8)
-          .sortBy(_._1)
-        val totalNote =
-          if (flagged.size > shown.size)
-            s""","regressions_total":${flagged.size}""" else ""
-        "," + "\"regressions\":" + shown.map { case (name, tq) =>
-          val p = prevOf(name).fold("null")(f2)
-          val b = bestOf(name).fold("null")(f2)
-          s"""{"q":"${shortKey(name)}","prev":$p,"best":$b,"now":${f2(tq)},"gc_ms":${gcOfChosen.getOrElse(name, 0L)}${attrJson(name)}}"""
-        }.mkString("[", ",", "]") + totalNote
-      }
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","core44_r01_set":${f3(core44)},"n_queries":${results.size},"queries":$qj,"failed":$failedJson$runSpeedJson$regs,"sf":"$sfDir"$trunc}"""
-    }
-    val full = line(results, truncated = false)
-    val budget = 1850
-    val stdoutLine =
-      if (full.length <= budget) full
-      else {
-        // keep the slowest queries (the ones worth seeing in a summary)
-        val bySlow = results.sortBy(-_._2)
-        var keep = bySlow.size
-        var candidate = line(bySlow.take(keep).sortBy(_._1), truncated = true)
-        while (candidate.length > budget && keep > 1) {
-          keep -= 1
-          candidate = line(bySlow.take(keep).sortBy(_._1), truncated = true)
-        }
-        candidate
-      }
-    println(stdoutLine)
+      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","protocol":"per-query min of 2 passes; raw passes in `passes`, failed passes negated (sign = pass_ok, excluded from the min)","core44_r01_set":${core44Total(results)},"queries":$qs,"passes":$passesJson,"gc_ms":$gcJson,"failed":${strs(failed)},"sf":"$sfDir"$regressionsJson}"""
+    Files.write(Paths.get(outPath), (json + "\n").getBytes(UTF_8))
+    println(stdoutLine(results, failed, sfDir))
     spark.stop()
-  }
-
-  /** Scale the sf corpora to 100k rows and time each dedup/ANN operator at
-    * doubling sizes. Returns a JSON fragment `"scale":{op:{n:sec,...},...}`.
-    *
-    * Corpus construction (deterministic, generation excluded from timing):
-    * every base doc/vector becomes V variants — variants 0-3 are NEAR-DUPS
-    * of each other (a couple of appended tokens / 2% vector noise), variants
-    * 4+ are independent (per-variant token prefix / fresh pseudo-random
-    * vector). So the corpus carries a realistic planted near-dup rate
-    * (4-cliques) at every size, and sizes are prefixes by base id — growing
-    * n never changes the smaller corpus's contents.
-    */
-  private def scaleBench(spark: SparkSession, sfDir: String): String = {
-    val scaleDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
-    val V = 20 // 5k docs -> 100k
-    val VE = 50 // 2k vectors -> 100k
-
-    // TWO document corpora, because the raw sf documents are
-    // template-generated and carry near-dup CLUSTERS whose size grows with
-    // the prefix length (measured via DuckDB: >=0.8-Jaccard pairs
-    // 14 -> 68 -> 256 and inverted-index join rows 76k -> 315k -> 1.27M
-    // across 1250/2500/5000 raw docs — ~4x per doubling, i.e. the TRUE
-    // answer set is quadratic in n on this data):
-    //  - CLEAN: every 2nd token salted with the base doc id, so EVERY
-    //    3-gram shingle differs across base docs — cross-doc similarity is
-    //    destroyed and the only near-dups are the planted variant
-    //    4-cliques. The realistic bounded-duplication corpus: output O(n),
-    //    the right substrate for showing the LSH family scales linearly.
-    //  - DIRTY: unsalted variants, template clusters intact. The right
-    //    substrate for showing the exact inverted-index op's sum(df^2)
-    //    cost model blowing up on df-heavy data.
-    val docs0 = Engine.table(spark, sfDir, "documents").select("doc_id", "text")
-    val salted = concat_ws(" ",
-      transform(split(col("text"), "\\s+"), (t, i) =>
-        when(pmod(i, lit(2)) === 0, concat(lit("d"), col("doc_id"), lit("_"), t)).otherwise(t)))
-    // The variant text MUST be computed in its own step BEFORE the select
-    // that re-aliases `doc_id`: Spark 4.x lateral-column-alias resolution
-    // lets `col("doc_id")` inside the same select list resolve to the NEW
-    // alias (base*V+variant) instead of the input column — which silently
-    // salted every VARIANT with a unique id, destroying the planted
-    // 4-cliques (measured: zero LSH candidates on the "clean" corpus, so
-    // r6-r8 minhash_lsh scale series exercised only the no-output path).
-    def variants(bodyFirst4: Column) =
-      docs0.withColumn("variant", explode(sequence(lit(0), lit(V - 1))))
-        .withColumn("vtext",
-          // variants >= 4: prefix every token with (variant, BASE DOC id) —
-          // doc-specific, so the raw corpus's template clusters do not
-          // survive inside a variant layer (u7_A_tok vs u7_B_tok differ)
-          when(col("variant") < 4, concat(bodyFirst4, lit(" vt"), col("variant")))
-            .otherwise(concat_ws(" ",
-              transform(split(col("text"), "\\s+"),
-                t => concat(lit("u"), col("variant"), lit("_"), col("doc_id"), lit("_"), t)))))
-        .select(
-          col("doc_id").as("orig_id"),
-          (col("doc_id") * V + col("variant")).as("doc_id"),
-          col("vtext").as("text"))
-        .repartition(32)
-    variants(salted).write.mode("overwrite").parquet(s"$scaleDir/documents")
-    variants(col("text")).write.mode("overwrite").parquet(s"$scaleDir/documents_dirty")
-
-    // deterministic pseudo-noise in [-1, 1] from (vec_id, variant, dim)
-    def noise(seed: Column*): Column =
-      pmod(xxhash64(seed: _*), lit(2001L)).cast("double") / 1000.0 - 1.0
-    // same lateral-alias hazard as variants(): compute the vector before
-    // the select that re-aliases vec_id, so noise seeds use the BASE id
-    // (variants 0-3 stay a fixed near-dup clique regardless of resolver
-    // behavior)
-    val emb0 = Engine.table(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    emb0.withColumn("variant", explode(sequence(lit(0), lit(VE - 1))))
-      .withColumn("vvec",
-        when(col("variant") < 4,
-          transform(col("embedding"), (x, i) =>
-            (x + noise(col("vec_id"), col("variant"), i) * lit(0.02)).cast("float")))
-          .otherwise(transform(col("embedding"), (x, i) =>
-            noise(col("vec_id"), col("variant"), i).cast("float"))))
-      .select(
-        col("vec_id").as("orig_id"),
-        (col("vec_id") * VE + col("variant")).as("vec_id"),
-        col("vvec").as("embedding"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$scaleDir/embeddings")
-
-    val docs = spark.read.parquet(s"$scaleDir/documents")
-    val docsDirty = spark.read.parquet(s"$scaleDir/documents_dirty")
-    val embs = spark.read.parquet(s"$scaleDir/embeddings")
-
-    // Same watchdog discipline as the per-query section: one wedged scale
-    // op must not forfeit the round's artifact. On timeout/failure the run
-    // returns NaN-free elapsed time and the series aborts (remaining sizes
-    // would each pay the full cap for no information).
-    // own env var (falls back to the per-query cap's var for back-compat):
-    // tightening the query cap must not silently tighten the scale cap
-    // 150 s (was 300): one wedged scale op must not cost 5 minutes of the
-    // round's wall budget — every healthy series point measures well under
-    // 30 s, so 150 s already means "broken", and the r12 official run spent
-    // its overage against the driver's whole-bench timeout.
-    val capSec = sys.env.get("SPARK_GRAFT_SCALE_CAP_SEC")
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_CAP_SEC")).fold(150L)(_.toLong)
-    val watchdog = new java.util.Timer("scale-watchdog", true)
-    def run(label: String)(f: => DataFrame): (Double, Boolean) = {
-      val group = s"scale-$label"
-      spark.sparkContext.setJobGroup(group, label, interruptOnCancel = true)
-      val task = new java.util.TimerTask {
-        def run(): Unit = {
-          System.err.println(s"[bench] scale:$label exceeded ${capSec}s — cancelling")
-          spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-        }
-      }
-      watchdog.schedule(task, capSec * 1000L)
-      val t0 = System.nanoTime()
-      val ok =
-        try { f.write.format("noop").mode("overwrite").save(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] scale:$label failed: ${e.getMessage}")
-            false
-        } finally {
-          task.cancel()
-          spark.sparkContext.clearJobGroup()
-        }
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      maybeGc()
-      (t, ok)
-    }
-
-    val out = scala.collection.mutable.LinkedHashMap[String, Seq[(Long, Double)]]()
-    // each op: one warmup at the smallest size (plan + janino compilation),
-    // then min-of-2 passes per size (GC/page-cache noise on a shared box
-    // easily dwarfs the signal) — growth RATIOS across sizes are the signal
-    // optional comma-separated op filter for focused A/B runs
-    // (e.g. SPARK_GRAFT_SCALE_ONLY=ppjoin); unset = the full sweep the
-    // driver records
-    val scaleOnly = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def series(name: String, sizes: Seq[Int], mult: Long)(f: Int => DataFrame): Seq[(Long, Double)] = {
-      if (!scaleOnly.forall(_.contains(name))) return Seq.empty
-      // No separate warmup run: min-of-2 already absorbs plan+codegen cost
-      // (pass 1 pays it, pass 2 wins the min) — the old extra smallest-size
-      // run re-paid ~20 op-executions of pure wall per sweep for nothing.
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-      var alive = true
-      for (base <- sizes if alive) {
-        val (t1, ok1) = run(name)(f(base))
-        if (!ok1) alive = false
-        // Second pass only below 8 s: min-of-2 exists to absorb first-pass
-        // codegen (~0.2-0.5 s) and box noise — on a multi-second point the
-        // signal already dominates both, and re-running the sweep's most
-        // expensive points doubled the section's wall for round-off-level
-        // information (the whole-bench run has a hard driver time budget).
-        else if (t1 >= 8.0) out += ((base * mult, t1))
-        else {
-          val (t2, ok2) = run(name)(f(base))
-          if (!ok2) alive = false else out += ((base * mult, math.min(t1, t2)))
-        }
-      }
-      out.toSeq
-    }
-
-    // UNTIMED attribution counters, emitted as sibling `scale` entries:
-    // a bending time curve is only diagnosable with the matching volume
-    // curve (is the DATA producing more pairs, or did the PLAN degrade?)
-    val counts = scala.collection.mutable.LinkedHashMap[String, Seq[(Long, Long)]]()
-
-    // linear family at 25k/50k/100k docs
-    out("minhash_lsh") = series("minhash_lsh", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.minhashLshPairs(docs.filter(col("orig_id") < base), col("doc_id"), col("text"))
-    }
-    // candidate-pair volume behind the minhash_lsh curve (r8's 4.6->20.7 s
-    // bend at 100k was otherwise unattributable); verified-output volume
-    // too, so candidate inflation vs genuine near-dup growth separate
-    if (out("minhash_lsh").nonEmpty) {
-      counts("minhash_lsh_cand") = Seq(1250, 2500, 5000).map { base =>
-        val (cand, st) = Dedup.minhashLshCandidates(
-          docs.filter(col("orig_id") < base), col("doc_id"), col("text"))
-        val n = cand.count()
-        st.unpersist()
-        (base * V.toLong, n)
-      }
-      counts("minhash_lsh_out") = Seq(1250, 2500, 5000).map { base =>
-        val n = Dedup.minhashLshPairs(
-          docs.filter(col("orig_id") < base), col("doc_id"), col("text")).count()
-        spark.catalog.clearCache()
-        (base * V.toLong, n)
-      }
-    }
-    out("simhash") = series("simhash", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.simhashPairs(docs.filter(col("orig_id") < base), col("doc_id"), col("text"))
-    }
-    // linear by construction: two-level rank + (w-1)-explode equi-join —
-    // the q208/q213 blocking stage
-    out("sorted_neighborhood") = series("sorted_neighborhood", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.sortedNeighborhoodPairs(docs.filter(col("orig_id") < base), col("doc_id"),
-        graft.functions.TextFns.fingerprint(col("text")), w = 8)
-    }
-    // linear family at 25k/50k/100k vectors
-    out("emb_lsh") = series("emb_lsh", Seq(500, 1000, 2000), VE.toLong) { base =>
-      Dedup.embeddingLshPairs(embs.filter(col("orig_id") < base),
-        col("vec_id"), col("embedding"), dims = 64, threshold = 0.9)
-    }
-    out("ann_brute_10q") = series("ann_brute_10q", Seq(500, 1000, 2000), VE.toLong) { base =>
-      val e = embs.filter(col("orig_id") < base)
-        .select(col("vec_id").as("id"), col("embedding").as("v"))
-      Similarity.bruteForceTopK(e, e.filter(col("id") < 10), k = 10)
-    }
-    // Persisted-IVF serve vs inline, as doubling-size curves (the q405
-    // claim "serving skips training + corpus assignment", measured rather
-    // than plan-asserted). An earlier 10-query attempt was job-overhead-
-    // bound (~2 s flat both paths, A/B 2026-08-16); this one probes 100
-    // queries per pass so the per-call work — inline: k-means training +
-    // full-corpus cell assignment + probe join; serve: probe join over the
-    // pre-partitioned cells only — is the measured signal. The index
-    // builds are the once-per-corpus cost by definition, so they happen
-    // before the timed series (same exclusion as the corpus generation).
-    val embSizes = Seq(500, 1000, 2000)
-    def ivfCorpus(base: Int): DataFrame =
-      embs.filter(col("orig_id") < base)
-        .select(col("vec_id").as("id"), col("embedding").as("v"))
-    if (scaleOnly.forall(_.contains("ann_ivf_serve")))
-      embSizes.foreach { base =>
-        Similarity.writeIvfIndex(ivfCorpus(base), s"$scaleDir/ivf_$base", nlist = 16)
-      }
-    out("ann_ivf_inline") = series("ann_ivf_inline", embSizes, VE.toLong) { base =>
-      val e = ivfCorpus(base)
-      Similarity.ivfTopK(e, e.filter(col("id") < 100), nlist = 16, nprobe = 2, k = 10)
-    }
-    out("ann_ivf_serve") = series("ann_ivf_serve", embSizes, VE.toLong) { base =>
-      Similarity.ivfTopKIndexed(spark, s"$scaleDir/ivf_$base",
-        ivfCorpus(base).filter(col("id") < 100), nprobe = 2, k = 10)
-    }
-    // candidate volume behind both ivf curves (identical probe half): rows
-    // entering the exact-scoring join = Σ probed-cell sizes over the 100
-    // queries — a super-linear time bend with a linear candidate curve
-    // would be plan, not data
-    if (out("ann_ivf_serve").nonEmpty) {
-      counts("ann_ivf_probe_cand") = embSizes.map { base =>
-        val n = Similarity.ivfProbeCandidates(spark, s"$scaleDir/ivf_$base",
-          ivfCorpus(base).filter(col("id") < 100), nprobe = 2).count()
-        (base * VE.toLong, n)
-      }
-    }
-    // graph-ANN tier (r12): build cost vs served-walk cost at doubling
-    // sizes. The build is the corpus-sized half (cell assignment + probed-
-    // cell candidate join + top-degree cut); the served walk reads the
-    // persisted edge list and pays only the fixed hop pipeline, so its
-    // curve should stay near-flat while the build doubles. Cells = first
-    // ceil(sqrt(n)) ids per size (not the 16-cell oracle fixture): at scale
-    // nlist tracks ~sqrt(n), which keeps per-cell candidate volume at
-    // nprobe*n/sqrt(n) per node — the n^1.5 total the design actually runs.
-    // r12's fixed 64-cell quantizer grew per-cell size LINEARLY with n,
-    // so the 100k build point measured an off-design quadratic regime and
-    // blew the series cap (12.7 s at 25k, aborted past 50k).
-    def nswCells(e: DataFrame, n: Long): DataFrame =
-      e.filter(col("id") < math.ceil(math.sqrt(n.toDouble)).toLong)
-        .select(col("id").cast("int").as("cell"), col("v").as("cv"))
-    if (scaleOnly.forall(_.contains("nsw_serve")))
-      embSizes.foreach { base =>
-        val e = ivfCorpus(base)
-        Similarity.writeNswIndex(
-          Similarity.nswBuildGraph(e, nswCells(e, base * VE.toLong),
-            nprobe = 2, degree = 8),
-          e, s"$scaleDir/nsw_$base")
-      }
-    out("nsw_build") = series("nsw_build", embSizes, VE.toLong) { base =>
-      val e = ivfCorpus(base)
-      Similarity.nswBuildGraph(e, nswCells(e, base * VE.toLong),
-        nprobe = 2, degree = 8)
-    }
-    out("nsw_serve") = series("nsw_serve", embSizes, VE.toLong) { base =>
-      Similarity.nswSearchIndexed(spark, s"$scaleDir/nsw_$base",
-        ivfCorpus(base).filter(col("id") < 100), hops = 5, ef = 16, k = 10)
-    }
-    // quadratic family (the exact ground-truth tools; the growth factor per
-    // doubling is the story — and the reason the LSH family above is the
-    // default at scale). ngram_jaccard runs on the DIRTY corpus where its
-    // sum(df^2) cost model actually bites; emb_cosine_pairs is n^2*d
-    // compute-bound on any corpus.
-    out("ngram_jaccard") = series("ngram_jaccard", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.ngramJaccardPairs(docsDirty.filter(col("orig_id") < base),
-        col("doc_id"), col("text"), maxInputBytes = 64L << 30)
-    }
-    out("emb_cosine_pairs") = series("emb_cosine_pairs", Seq(160, 320, 640), VE.toLong) { base =>
-      Dedup.embeddingCosinePairs(embs.filter(col("orig_id") < base),
-        col("vec_id"), col("embedding"), threshold = 0.95)
-    }
-    // the COMPOSED cleaning pipeline (q51/q144), exact-pair config vs
-    // MinHash+LSH config on the same clean corpus: same answer set (the LSH
-    // output is exact-Jaccard-verified), so the growth-ratio delta is pure
-    // pair-generation cost — the number that justifies pairFn=minhashLshPairs
-    // as the 100 TB default
-    out("clean_corpus_exact") = series("clean_corpus_exact", Seq(1250, 2500, 5000), V.toLong) { base =>
-      graft.operators.Pipeline.cleanCorpus(
-        docs.filter(col("orig_id") < base), col("doc_id"), col("text"))
-    }
-    out("clean_corpus_lsh") = series("clean_corpus_lsh", Seq(1250, 2500, 5000), V.toLong) { base =>
-      graft.operators.Pipeline.cleanCorpus(
-        docs.filter(col("orig_id") < base), col("doc_id"), col("text"),
-        pairFn = (df, idc, txt, th) => Dedup.minhashLshPairs(df, idc, txt, threshold = th))
-    }
-    // round-4 corpus ops (both linear by design: the df count shuffles
-    // hashes, the anti join broadcasts; tf/df partial-aggregate)
-    out("strip_boilerplate") = series("strip_boilerplate", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Corpus.stripBoilerplate(
-        docs.filter(col("orig_id") < base)
-          .withColumn("t2", concat_ws("\n", col("text"), lit("all rights reserved"))),
-        col("doc_id"), col("t2"), minDocs = 10L)
-    }
-    out("hashed_tfidf") = series("hashed_tfidf", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Corpus.hashedTfIdf(docs.filter(col("orig_id") < base), col("doc_id"),
-        graft.functions.TextFns.tokens(col("text")), dim = 1024)
-    }
-    // round-6 corpus ops: dup-substring spans in the hashed scale config
-    // (shingle groupBy + semi join, both linear in corpus tokens) and BPE
-    // merge induction (the vocab aggregation is the only corpus-sized
-    // stage; the fixed rounds iterate over the distinct-word vocabulary).
-    // CAVEAT on the bpe series: the CLEAN corpus salts every 2nd token
-    // with the doc id, so |vocab| grows ~linearly with corpus size here —
-    // the worst case for BPE's per-round vocab pass. Real corpora grow
-    // vocabulary sublinearly (Heaps' law), putting the rounds' cost well
-    // under the initial corpus aggregation.
-    out("dup_substr_hashed") = series("dup_substr_hashed", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.dupSubstrSpans(docs.filter(col("orig_id") < base), col("doc_id"),
-        graft.functions.TextFns.tokens(col("text")), k = 8, hashShingles = true)
-    }
-    // duplicated-window volume behind the dup_substr curve (the r9 bend —
-    // 3.0->10.5 s at 25k->100k — needs its output-growth column to be
-    // attributable to data, not plan)
-    if (out("dup_substr_hashed").nonEmpty) {
-      counts("dup_substr_out") = Seq(1250, 2500, 5000).map { base =>
-        val n = Dedup.dupSubstrSpans(docs.filter(col("orig_id") < base),
-          col("doc_id"), graft.functions.TextFns.tokens(col("text")),
-          k = 8, hashShingles = true).count()
-        spark.catalog.clearCache()
-        (base * V.toLong, n)
-      }
-    }
-    // round-6: exact PPJoin (prefix + length filter, identical-set group
-    // dedup, dictionary-encoded verification; the bitmask fast path needs
-    // vocab <= 256, which the salted scale corpus deliberately exceeds —
-    // this series measures the GENERAL integer path). CLEAN corpus: with
-    // bounded duplication (planted 4-cliques only) the salted rare-first
-    // prefixes keep the candidate set ~linear — the exact-threshold join
-    // staying in the linear family is the claim. (On df-heavy template
-    // data the ANSWER SET itself is quadratic — measured separately:
-    // 9/62/215 s at 25k/50k/100k dirty docs, the same blowup
-    // ngram_jaccard's series records; an exact join cannot beat its own
-    // output size, which is why minhash_lsh is still the 100 TB default.)
-    out("ppjoin") = series("ppjoin", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Dedup.ppJoinPairs(docs.filter(col("orig_id") < base), col("doc_id"),
-        graft.functions.TextFns.tokens(col("text")), tPpm = 900000L)
-    }
-    // exact depth-2 tree trainer (q407): the one-histogram-pass-per-node
-    // claim means time should track the CORPUS scan (3 stacked-histogram
-    // aggregations + feature computation) linearly, with the driver
-    // argmin flat — the curve that validates the LightGBM-histogram shape
-    // beyond the single size q407's focused timing covered
-    out("decision_tree2") = series("decision_tree2", Seq(1250, 2500, 5000), V.toLong) { base =>
-      graft.operators.Validation.decisionTree2(
-        docs.filter(col("orig_id") < base),
-        Seq("len" -> length(col("text")).cast("long"),
-          "ntok" -> size(graft.functions.TextFns.tokens(col("text"))).cast("long")),
-        pmod(col("doc_id"), lit(3)) === 0)
-    }
-    // driver-state volume behind the tree curve: stacked (feature, value)
-    // histogram rows at the root — the quantity the 2^20 cap bounds; the
-    // scan is linear in rows, the collected histogram in DISTINCT values
-    if (out("decision_tree2").nonEmpty) {
-      counts("decision_tree2_hist") = Seq(1250, 2500, 5000).map { base =>
-        val n = docs.filter(col("orig_id") < base)
-          .agg((countDistinct(length(col("text")).cast("long")) +
-            countDistinct(size(graft.functions.TextFns.tokens(col("text"))).cast("long")))
-            .alias("h"))
-          .collect()(0).getLong(0)
-        (base * V.toLong, n)
-      }
-    }
-    out("bpe_merges") = series("bpe_merges", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Corpus.bpeMerges(docs.filter(col("orig_id") < base),
-        graft.functions.TextFns.tokens(col("text")), rounds = 4)
-    }
-    // round-8 components algorithm on its worst case: a single chain of
-    // length n (diameter n — the shape where label propagation needs n
-    // rounds). The two-phase star path converges in ~log2(n) rounds, so
-    // time is round-dominated and near-FLAT across the 4x size step
-    // (measured 12.5k->50k: 9.8 s -> 13.4 s, 1.37x for 4x the data) —
-    // the measured version of the O(log^2) claim in
-    // Dedup.nearDupComponents. Two sizes: the growth ratio is the
-    // signal, and each run costs ~18 driver rounds regardless of n.
-    // maxLocalEdges=0 forces the DISTRIBUTED star path: the default hybrid
-    // would finish this quotient on the driver (it fits by design), and
-    // this series exists to measure the O(log² n) distributed shape that
-    // runs when the quotient does NOT fit
-    out("components_chain") = series("components_chain", Seq(12500, 50000), 1L) { n =>
-      val chain = spark.range(n - 1L)
-        .select(col("id").alias("id_a"), (col("id") + 1L).alias("id_b"))
-      Dedup.nearDupComponents(chain, maxIter = 40, maxLocalEdges = 0L)
-    }
-    // dsir: vocab-sized feature join, linear in corpus tokens; cms: the
-    // counter matrix stays width x depth cells at EVERY size — the time
-    // series is linear scan cost over constant state
-    out("dsir_weights") = series("dsir_weights", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Corpus.dsirWeights(docs.filter(col("orig_id") < base), col("doc_id"),
-        graft.functions.TextFns.tokens(col("text")),
-        pmod(col("doc_id"), lit(3)) === 0)
-    }
-    out("cms_heavy_hitters") = series("cms_heavy_hitters", Seq(1250, 2500, 5000), V.toLong) { base =>
-      Corpus.cmsHeavyHitters(docs.filter(col("orig_id") < base), col("text"),
-        width = 1024, depth = 4, k = 50)
-    }
-    // IVFADC (q174's fixture construction: first-8 cells, first-16
-    // residual codebooks): candidate scoring is a narrow-int LUT join, so
-    // growth should track the ~linear candidate count — the memory-layout
-    // sibling of ann_brute_10q's full-vector arithmetic. Expect the series
-    // ~FLAT but ABOVE brute at these sizes: the fixed index-build stages
-    // (assignment, residuals, codes) dominate 10 queries over 64-dim
-    // vectors — the same small-scale crossover as clean_corpus_lsh vs the
-    // exact pair join; the LUT join is what survives 100x, not the setup
-    // candidate volume behind the ivfpq curve: rows entering the ADC LUT
-    // join = sum of probed-cell sizes over the 10 queries (x m sub-rows).
-    // If this is linear while the time bends, the bend is plan/spill, not
-    // data.
-    def ivfpqCand(base: Int): Long = {
-      val e = embs.filter(col("orig_id") < base)
-        .select(col("vec_id").as("id"),
-          col("embedding").cast("array<double>").as("v"))
-      val cents = e.filter(col("id") < 8)
-        .select(col("id").as("cid"), col("v").as("cv"))
-      val cellSizes = graft.operators.Similarity.assignToCentroids(e, cents)
-        .groupBy(col("cid")).count()
-      val probes = e.filter(col("id") < 10)
-        .select(col("id").alias("q_id"), col("v").alias("qv"))
-        .crossJoin(broadcast(cents))
-        .select(col("q_id"), col("cid"),
-          graft.plans.VectorExprs.l2DistSq(col("qv"), col("cv")).alias("cd"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cd").asc, col("cid").asc)
-      probes.withColumn("pr", row_number().over(w)).filter(col("pr") <= 2)
-        .join(cellSizes, Seq("cid"))
-        .agg(sum(col("count"))).collect()(0).getLong(0)
-    }
-    out("ivfpq_adc_10q") = series("ivfpq_adc_10q", Seq(500, 1000, 2000), VE.toLong) { base =>
-      val e = embs.filter(col("orig_id") < base)
-        .select(col("vec_id").as("id"),
-          col("embedding").cast("array<double>").as("v"))
-      val cents = e.filter(col("id") < 8)
-        .select(col("id").as("cid"), col("v").as("cv"))
-      val a16 = graft.operators.Similarity
-        .assignToCentroids(e.filter(col("id") < 16), cents)
-        .select(col("id"), col("cid"))
-      val res16 = e.filter(col("id") < 16).join(a16, "id")
-        .join(broadcast(cents), "cid")
-        .select(col("id"), zip_with(col("v"), col("cv"), (a, b) => a - b).as("rv"))
-      val cb = res16.select(col("id").as("cbid"),
-          explode(sequence(lit(0), lit(7))).as("sub"), col("rv"))
-        .select(col("sub"), col("cbid").as("cid"),
-          slice(col("rv"), col("sub") * 8 + 1, lit(8)).as("cv"))
-      graft.operators.Similarity.ivfPqAdcTopK(e, e.filter(col("id") < 10),
-        cents, cb, m = 8, subDims = 8, nprobe = 2, k = 10)
-    }
-    if (out("ivfpq_adc_10q").nonEmpty)
-      counts("ivfpq_adc_cand") = Seq(500, 1000, 2000).map(b => (b * VE.toLong, ivfpqCand(b)))
-
-    // best-effort temp cleanup (bench correctness does not depend on it)
-    try SparkEntry.deleteRecursively(scaleDir) catch { case _: Throwable => () }
-
-    (out.filter(_._2.nonEmpty).map { case (op, pts) =>
-      "\"" + op + "\":" + pts.map { case (n, s) => "\"" + n + "\":" + s }.mkString("{", ",", "}")
-    } ++ counts.map { case (op, pts) =>
-      "\"" + op + "\":" + pts.map { case (n, c) => "\"" + n + "\":" + c }.mkString("{", ",", "}")
-    }).mkString("\"scale\":{", ",", "}")
   }
 }

@@ -125,8 +125,7 @@ object SparkEntry {
     sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** q304's sparse-vector construction (bigram hashed-TF-IDF over every
-    * 3rd doc), factored out so Bench's attribution counters measure
-    * candidate volume on the EXACT frame the query joins.
+    * 3rd doc), the frame [[graft.operators.Dedup.sparseCosinePairs]] joins.
     *
     * '_' joiner, not ' ': hashedTfIdf's portable hash is the rolling
     * token fingerprint, which would TOKENIZE a space-joined bigram and

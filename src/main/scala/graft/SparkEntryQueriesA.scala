@@ -12,7 +12,7 @@ import graft.operators.Relational
 import graft.operators.Relational.GraftOps
 import graft.streaming.EventStreams
 
-import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced}
+import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, bucketedRevenue, skewRebalanced}
 
 /** [[SparkEntry.queries]] part: 213 entries, q01_select .. q370_boruvka_mst. Mechanical split
   * of the single registry map (round 12) — entry order, bodies, and keys

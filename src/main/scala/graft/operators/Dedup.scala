@@ -125,8 +125,7 @@ object Dedup {
 
   /** The candidate-generation stage of [[minhashLshPairs]] on its own:
     * (distinct candidate id pairs, persisted per-doc shingle state).
-    * Exposed so instrumentation (the scale bench's per-size candidate
-    * counts) can measure the pre-verification pair volume — the number
+    * Counting it gives the pre-verification pair volume — the number
     * that explains whether a time curve bends because the DATA has more
     * near-dups or because the PLAN degraded.
     */
@@ -421,14 +420,11 @@ object Dedup {
         col("dot"), col("n2_a"), col("n2_b"))
   }
 
-  /** Shared front half of [[sparseCosinePairs]] and
-    * [[sparseCosineCandidates]] (the ppJoinStage treatment): the
-    * hub-capped inverted index and its bucket-keyed candidate self-join
-    * (aliases `a`/`b`, id_a < id_b), plus the UNCAPPED norm frame (dropped
-    * hub buckets lose dot contribution, never norm mass). Factored so the
-    * bench attribution counter measures the SAME candidate pipeline the
-    * production pairs run — a future change to the cap or an extra pruning
-    * filter flows to both by construction.
+  /** Front half of [[sparseCosinePairs]]: the hub-capped inverted index
+    * and its bucket-keyed candidate self-join (aliases `a`/`b`,
+    * id_a < id_b), plus the UNCAPPED norm frame (dropped hub buckets lose
+    * dot contribution, never norm mass). The candidate frame is the
+    * pre-aggregation pair volume, the place to count candidates.
     */
   private def sparseCosineStage(vecs: DataFrame,
       maxBucket: Int): (DataFrame, DataFrame) = {
@@ -451,21 +447,6 @@ object Dedup {
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
     (cand, n2)
   }
-
-  /** Candidate-pair volume behind [[sparseCosinePairs]]: the distinct
-    * (id_a, id_b) pairs sharing >= 1 surviving bucket, BEFORE the dot
-    * aggregation and threshold filter — the bench attribution instrument
-    * (the minhashLshCandidates pattern: a bending time curve is only
-    * diagnosable next to the matching candidate-volume curve). Consumes
-    * [[sparseCosineStage]], the exact frame the production pairs
-    * aggregate; Catalyst prunes the unused weight columns from this
-    * branch's scan.
-    */
-  def sparseCosineCandidates(vecs: DataFrame,
-      maxBucket: Int = 1 << 20): DataFrame =
-    sparseCosineStage(vecs, maxBucket)._1
-      .select(col("a.id").alias("id_a"), col("b.id").alias("id_b"))
-      .distinct()
 
   /** Weighted (multiset) Jaccard near-dup pairs over token bags:
     * `wJ(a,b) = Σ_t min(tf_a(t), tf_b(t)) / Σ_t max(tf_a(t), tf_b(t))` —
@@ -1409,6 +1390,13 @@ object Dedup {
         col("a.d").cast("long").alias("d"))
   }
 
+  /** Front half of [[ppJoinPairs]] (rank-encode, identical-set grouping,
+    * prefix index, length-filtered candidate join), carried as named
+    * frames so [[ppJoinVerify]] reads each stage by name.
+    */
+  private case class PpJoinStage(sets: DataFrame, groups: DataFrame,
+      members: DataFrame, cand: DataFrame)
+
   /** EXACT set-similarity join above a Jaccard threshold via prefix
     * filtering (Chaudhuri et al. SSJoin / Bayardo et al. All-Pairs — the
     * PPJoin candidate rule): where MinHash+LSH ([[minhashLshPairs]]) trades
@@ -1437,25 +1425,6 @@ object Dedup {
     * verification join by id. Prefix length shrinks as t grows — at
     * t=0.8 a 100-token doc indexes 21 tokens, not 100.
     */
-  /** Shared front half of [[ppJoinPairs]] (rank-encode, identical-set
-    * grouping, prefix index, length-filtered candidate join), carried as
-    * named frames so [[ppJoinCandidates]] can count the candidate volume
-    * on the exact pipeline the production join runs.
-    */
-  private case class PpJoinStage(sets: DataFrame, groups: DataFrame,
-      members: DataFrame, cand: DataFrame)
-
-  /** Candidate GROUP-pair volume behind [[ppJoinPairs]] — after the
-    * prefix + length filters, before verification; the bench attribution
-    * instrument. Returns (candidates, persisted handles to unpersist when
-    * done) — the [[minhashLshCandidates]] contract.
-    */
-  def ppJoinCandidates(df: DataFrame, id: Column, tokens: Column,
-      tPpm: Long): (DataFrame, Seq[DataFrame]) = {
-    val st = ppJoinStage(df, id, tokens, tPpm)
-    (st.cand, Seq(st.sets, st.groups, st.members))
-  }
-
   def ppJoinPairs(df: DataFrame, id: Column, tokens: Column,
       tPpm: Long): DataFrame = {
     val st = ppJoinStage(df, id, tokens, tPpm)

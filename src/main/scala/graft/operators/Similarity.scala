@@ -500,31 +500,6 @@ object Similarity {
     nswGreedySearch(spark.read.parquet(s"$path/edges"),
       spark.read.parquet(s"$path/vectors"), queries, hops, ef, k, checkpointDir)
 
-  /** Candidate-volume instrument for the persisted-index serve path: the
-    * (q_id, c_id) pairs entering [[ivfTopKIndexed]]'s exact-scoring join
-    * (Σ probed-cell sizes over the query set) BEFORE top-k truncation —
-    * the volume column next to a serve-time curve that says whether a
-    * bend is data (candidate growth) or plan ([[graft.operators.Dedup]]'s
-    * minhashLshCandidates pattern).
-    */
-  def ivfProbeCandidates(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, nprobe: Int): DataFrame = {
-    val centDf = spark.read.parquet(s"$path/centroids")
-    val nlist = centDf.count().toInt
-    val cCells = spark.read.parquet(s"$path/cells")
-      .select(col("id").alias("c_id"), col("cell"))
-    val qCells =
-      if (nprobe >= nlist)
-        queries.select(col("id").alias("q_id"))
-          .crossJoin(broadcast(centDf.select(col("cell"))))
-      else
-        ivfAssignCells(queries.select(col("id"), col("v")), centDf, "v", nprobe)
-          .select(col("id").alias("q_id"), col("cell"))
-    cCells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"))
-  }
-
   /** Persist the IVFADC quantizer pair — coarse centroids (cid, cv) and
     * PQ residual codebooks (sub, cid, cv) — the [[ivfPqAdcTopK]] serving
     * state. Codebook training is the expensive once-per-corpus step; the
