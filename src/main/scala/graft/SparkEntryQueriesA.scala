@@ -509,41 +509,22 @@ private[graft] object SparkEntryQueriesA {
       // intra-batch-order-dependent, so the query projects the key columns
       // only — making the result exactly DISTINCT(user_id, event_type) and
       // hash-matchable.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q49")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q49_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runDedupSmoke(s, staged.toString, qn, Seq("user_id", "event_type"))
-          .selectCols(Seq(col("user_id"), col("event_type")))
-          .sortBy(Seq(col("user_id"), col("event_type")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runDedupSmoke(s, staged, Seq("user_id", "event_type"))
+        .selectCols(Seq(col("user_id"), col("event_type")))
+        .sortBy(Seq(col("user_id"), col("event_type")))
     }),
 
     "q42_sessionize_stream" -> ((s, dir) => {
       // TRUE Structured Streaming run (flatMapGroupsWithState + event-time
       // timeout) drained through a memory sink. FileStreamSource needs a
-      // directory, so the single-file table is staged into a temp dir; one
+      // directory, so the single-file table is staged into one; one
       // input file => one micro-batch => deterministic output: every session
       // except each user's last (still open at drain time).
-      val staged = java.nio.file.Files.createTempDirectory("graft_q42")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q42_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runSessionizeSmoke(s, staged.toString, qn, gapMinutes = 30)
-          .selectCols(Seq(col("user_id"), col("session_seq"), col("start_us"), col("end_us"), col("n_events")))
-          .sortBy(Seq(col("user_id"), col("session_seq")))
-      } finally {
-        // the drain materialized its result, so the staged copy can go
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runSessionizeSmoke(s, staged, gapMinutes = 30)
+        .selectCols(Seq(col("user_id"), col("session_seq"), col("start_us"), col("end_us"), col("n_events")))
+        .sortBy(Seq(col("user_id"), col("session_seq")))
     }),
 
     // ---- corpus preparation (round 3) -----------------------------------
@@ -693,26 +674,17 @@ private[graft] object SparkEntryQueriesA {
       // min, same user) drained through a memory sink. Inner-join output is
       // append-only and watermark-independent for a finite drain, so the
       // result equals the batch join — replayed verbatim by the oracle.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q71")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q71_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runStreamJoinSmoke(s, staged.toString, qn,
-            Seq("user_id"), leftType = "click", rightType = "purchase",
-            windowSeconds = 1800)
-          .selectCols(Seq(
-            col("l_user_id").as("user_id"),
-            col("l_event_id").as("click_id"),
-            col("r_event_id").as("purchase_id"),
-            unix_micros(col("l_ts")).as("click_us"),
-            unix_micros(col("r_ts")).as("purchase_us")))
-          .sortBy(Seq(col("user_id"), col("click_id"), col("purchase_id")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runStreamJoinSmoke(s, staged,
+          Seq("user_id"), leftType = "click", rightType = "purchase",
+          windowSeconds = 1800)
+        .selectCols(Seq(
+          col("l_user_id").as("user_id"),
+          col("l_event_id").as("click_id"),
+          col("r_event_id").as("purchase_id"),
+          unix_micros(col("l_ts")).as("click_us"),
+          unix_micros(col("r_ts")).as("purchase_us")))
+        .sortBy(Seq(col("user_id"), col("click_id"), col("purchase_id")))
     }),
 
     "q72_rollup" -> ((s, dir) =>
@@ -1780,21 +1752,12 @@ private[graft] object SparkEntryQueriesA {
       // equals the batch tumbling counts exactly (q40's windowed family,
       // now as a streaming driver fact). FileStreamSource needs a
       // directory — q42's staging idiom
-      val staged = java.nio.file.Files.createTempDirectory("graft_q172")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"g172_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runWindowedTopK(s, staged.toString, qn, "1 hour", k = 3)
-          .selectCols(Seq(
-            unix_micros(col("win_start").cast("timestamp")).as("win_us"),
-            col("event_type"), col("n"), col("rank")))
-          .sortBy(Seq(col("win_us"), col("rank")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runWindowedTopK(s, staged, "1 hour", k = 3)
+        .selectCols(Seq(
+          unix_micros(col("win_start").cast("timestamp")).as("win_us"),
+          col("event_type"), col("n"), col("rank")))
+        .sortBy(Seq(col("win_us"), col("rank")))
     }),
 
     "q173_cms_heavy_hitters" -> ((s, dir) =>

@@ -738,23 +738,14 @@ private[graft] object SparkEntryQueriesB {
       // OHLC aggregate in complete mode — min_by/max_by state is one
       // (order, value) pair per group; the oracle is the batch SQL
       // verbatim (stream == batch is the claim)
-      val staged = java.nio.file.Files.createTempDirectory("graft_q308")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q308_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runOhlcStreamSmoke(s, staged.toString, qn,
-            "event_type", "event_id",
-            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
-          .selectCols(Seq(col("key"), unix_micros(col("bucket")).as("bucket_us"),
-            col("n"), col("open"), col("close"), col("high"), col("low"),
-            col("sum_v")))
-          .sortBy(Seq(col("key"), col("bucket_us")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runOhlcStreamSmoke(s, staged,
+          "event_type", "event_id",
+          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
+        .selectCols(Seq(col("key"), unix_micros(col("bucket")).as("bucket_us"),
+          col("n"), col("open"), col("close"), col("high"), col("low"),
+          col("sum_v")))
+        .sortBy(Seq(col("key"), col("bucket_us")))
     }),
 
     "q309_blocking_eval" -> ((s, dir) => {
@@ -1192,9 +1183,8 @@ private[graft] object SparkEntryQueriesB {
       // same query, the shape Spark only allows with aligned event-time
       // semantics. Append emits a day once the watermark passes its end;
       // the oracle replays the finalized-window set exactly.
-      val qn = s"graft_q283_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
       EventStreams.runChainedStatefulSmoke(s, s"$dir/events.parquet",
-          qn, Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour")
+          Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour")
         .sortBy(Seq(col("day_start_us")))
     }),
 
@@ -1270,9 +1260,8 @@ private[graft] object SparkEntryQueriesB {
       // purchases when it passes them outright (r_ts < W — any matching
       // view would be wholly behind the watermark). Same pinned three-
       // batch drain; the oracle replays all three emission sets.
-      val qn = s"graft_q279_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
       EventStreams.runStreamLeftOuterJoinSmoke(s, s"$dir/events.parquet",
-          qn, "user_id", "view", "purchase", 7200L,
+          "user_id", "view", "purchase", 7200L,
           Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour",
           joinType = "full_outer")
         .selectCols(Seq(col("l_event_id"), col("l_user_id"),
@@ -1331,9 +1320,8 @@ private[graft] object SparkEntryQueriesB {
       // progression; rows-processed-before-timers is pinned by the
       // StreamingSpec hand case, so the emission set is an exact
       // two-phase state machine the oracle replays.
-      val qn = s"graft_q276_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
       EventStreams.runTimerSessionsSmoke(s, s"$dir/events.parquet",
-          qn, "purchase", 21600L,
+          "purchase", 21600L,
           Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour")
         .sortBy(Seq(col("user_id")))
     }),
@@ -1419,8 +1407,7 @@ private[graft] object SparkEntryQueriesB {
       // Commutative accumulators make the final per-key emission equal
       // the batch groupBy exactly; batches_seen (= distinct event_id % 3
       // per user) proves the state survived batch boundaries.
-      val qn = s"graft_q271_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      EventStreams.runTransformWithStateSmoke(s, s"$dir/events.parquet", qn)
+      EventStreams.runTransformWithStateSmoke(s, s"$dir/events.parquet")
         .sortBy(Seq(col("user_id")))
     }),
 
@@ -1451,9 +1438,8 @@ private[graft] object SparkEntryQueriesB {
       // oracle replays: matches ∪ unmatched with window-end < final-batch
       // watermark. The outer-join semantics Structured Streaming is
       // genuinely hard about, made hash-checkable.
-      val qn = s"graft_q269_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
       EventStreams.runStreamLeftOuterJoinSmoke(s, s"$dir/events.parquet",
-          qn, "user_id", "view", "purchase", 7200L,
+          "user_id", "view", "purchase", 7200L,
           Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour")
         .selectCols(Seq(col("l_event_id"), col("l_user_id"),
           unix_micros(col("l_ts")).as("l_ts_us"),
@@ -1739,19 +1725,10 @@ private[graft] object SparkEntryQueriesB {
       // drained through the identical batch drift decoration against the
       // even-user reference — stream == batch, and the oracle replays the
       // batch shape
-      val staged = java.nio.file.Files.createTempDirectory("graft_q255")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q255_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runDriftStreamSmoke(s, staged.toString, qn,
-            "event_type", "user_id % 2 = 0", "user_id % 2 = 1")
-          .sortBy(Seq(col("category")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runDriftStreamSmoke(s, staged,
+          "event_type", "user_id % 2 = 0", "user_id % 2 = 1")
+        .sortBy(Seq(col("category")))
     }),
 
     "q254_power_iteration" -> ((s, dir) =>
@@ -1900,19 +1877,10 @@ private[graft] object SparkEntryQueriesB {
       // counts as a complete-mode streaming aggregation (9 longs of state),
       // drained through the identical batch decoration — the oracle is
       // q234's, row for row
-      val staged = java.nio.file.Files.createTempDirectory("graft_q243")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q243_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runBenfordStreamSmoke(s, staged.toString, qn,
-            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
-          .sortBy(Seq(col("digit")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runBenfordStreamSmoke(s, staged,
+          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
+        .sortBy(Seq(col("digit")))
     }),
 
     "q242_personalized_pagerank" -> ((s, dir) => {
@@ -2450,22 +2418,13 @@ private[graft] object SparkEntryQueriesB {
       // REACHED stage. Day windows the watermark never passes stay open
       // and emit nothing — the q42 last-session contract — and the oracle
       // replays the cascade for exactly the closed days.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q207")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q207_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runFunnelSmoke(s, staged.toString, qn, Seq(
-            "view" -> (col("event_type") === "view"),
-            "click" -> (col("event_type") === "click"),
-            "purchase" -> (col("event_type") === "purchase")))
-          .selectCols(Seq(col("user_id"), col("win_us"), col("stage"), col("t_us")))
-          .sortBy(Seq(col("user_id"), col("win_us"), col("stage")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runFunnelSmoke(s, staged, Seq(
+          "view" -> (col("event_type") === "view"),
+          "click" -> (col("event_type") === "click"),
+          "purchase" -> (col("event_type") === "purchase")))
+        .selectCols(Seq(col("user_id"), col("win_us"), col("stage"), col("t_us")))
+        .sortBy(Seq(col("user_id"), col("win_us"), col("stage")))
     }),
 
     "q206_streaming_ivm" -> ((s, dir) => {
@@ -2513,14 +2472,8 @@ private[graft] object SparkEntryQueriesB {
       // register max grouped by (tumbling hour, bucket) — 64 longs of
       // state per window — drained dense; the oracle computes every
       // window's registers from the batch table
-      val staged = EventStreams.stagedOnce(s"events_copy|$dir") { d =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          java.nio.file.Paths.get(d, "events.parquet"))
-        ()
-      }
-      val qn = s"graft_q204_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      EventStreams.runHllWindowedSmoke(s, staged, qn, "event_id")
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runHllWindowedSmoke(s, staged, "event_id")
         .selectCols(Seq(col("win_start").cast("long").as("win_epoch"),
           col("bucket"), col("register"), col("n_exact")))
         .sortBy(Seq(col("win_epoch"), col("bucket")))
@@ -2550,14 +2503,8 @@ private[graft] object SparkEntryQueriesB {
       // max in complete mode (64 longs of state for any stream length),
       // drained and finalized through the identical batch math — the
       // oracle computes the batch registers over event_id directly.
-      val staged = EventStreams.stagedOnce(s"events_copy|$dir") { d =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          java.nio.file.Paths.get(d, "events.parquet"))
-        ()
-      }
-      val qn = s"graft_q201_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      EventStreams.runHllStreamSmoke(s, staged, qn, "event_id")
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runHllStreamSmoke(s, staged, "event_id")
         .sortBy(Seq(col("bucket")))
     }),
 
@@ -2633,23 +2580,14 @@ private[graft] object SparkEntryQueriesB {
       // rule-count-sized state): the final per-batch report must equal the
       // batch report over the same events — which is what the oracle
       // computes. Mixed pass/fail rules on live data (value cap fires).
-      val staged = java.nio.file.Files.createTempDirectory("graft_q196")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q196_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runValidationGateSmoke(s, staged.toString, qn, Seq(
-            "type_domain" -> !col("event_type").isin(
-              "click", "error", "purchase", "signup", "view"),
-            "user_complete" -> col("user_id").isNull,
-            "value_cap_400" -> (col("value") > 400.0),
-            "value_positive" -> (col("value") <= 0.0)))
-          .sortBy(Seq(col("rule")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      EventStreams.runValidationGateSmoke(s, staged, Seq(
+          "type_domain" -> !col("event_type").isin(
+            "click", "error", "purchase", "signup", "view"),
+          "user_complete" -> col("user_id").isNull,
+          "value_cap_400" -> (col("value") > 400.0),
+          "value_positive" -> (col("value") <= 0.0)))
+        .sortBy(Seq(col("rule")))
     }),
 
     "q195_categorical_drift" -> ((s, dir) => {
@@ -3230,23 +3168,14 @@ private[graft] object SparkEntryQueriesB {
       // TRUE streaming stateless enrichment: the events file stream joins
       // the static customer dim (broadcast per micro-batch, no state
       // stores); append output equals the batch left join => exact oracle
-      val staged = java.nio.file.Files.createTempDirectory("graft_q98")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q98_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        val dim = t(s, dir, "customer")
-          .selectCols(Seq(col("c_custkey").as("user_id"),
-            col("c_mktsegment"), col("c_nationkey")))
-        EventStreams.runStreamEnrichSmoke(s, staged.toString, qn, dim, Seq("user_id"))
-          .selectCols(Seq(col("event_id"), col("user_id"), col("event_type"),
-            col("c_mktsegment"), col("c_nationkey")))
-          .sortBy(Seq(col("event_id")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
+      val staged = EventStreams.stagedCopy(s"$dir/events.parquet")
+      val dim = t(s, dir, "customer")
+        .selectCols(Seq(col("c_custkey").as("user_id"),
+          col("c_mktsegment"), col("c_nationkey")))
+      EventStreams.runStreamEnrichSmoke(s, staged, dim, Seq("user_id"))
+        .selectCols(Seq(col("event_id"), col("user_id"), col("event_type"),
+          col("c_mktsegment"), col("c_nationkey")))
+        .sortBy(Seq(col("event_id")))
     }),
 
     "q97_containment_pairs" -> ((s, dir) => {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -250,25 +250,13 @@ object EventStreams {
     * directory, timeouts fired by the final no-data batch, drained into a
     * memory sink — the [[runSessionizeSmoke]] pattern.
     */
-  def runFunnelSmoke(spark: SparkSession, parquetPath: String, queryName: String,
+  def runFunnelSmoke(spark: SparkSession, parquetPath: String,
       stages: Seq[(String, Column)], winMicros: Long = 86400000000L): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val stream = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
-      val q = streamingFunnel(stream, stages, winMicros).writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+      drainStream(spark, streamingFunnel(stream, stages, winMicros))
     }
   }
 
@@ -366,29 +354,14 @@ object EventStreams {
     * pins the simpler semantics. [[StreamingSpec]] exercises the timeout
     * path explicitly with a two-batch run.)
     */
-  def runSessionizeSmoke(spark: SparkSession, parquetPath: String, queryName: String,
+  def runSessionizeSmoke(spark: SparkSession, parquetPath: String,
       gapMinutes: Int = 30, noDataBatches: Boolean = false): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)) {
-      val q = sessionizeStream(stream, gapMinutes).writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // Materialize and drop the memory sink: repeated drains in one session
-      // (bench passes, verify) would otherwise accumulate never-freed
-      // in-memory tables on the driver.
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+      drainStream(spark, sessionizeStream(stream, gapMinutes))
     }
   }
 
@@ -400,25 +373,13 @@ object EventStreams {
     * tiny (distinct event types), the stream did the heavy counting.
     */
   def runWindowedTopK(spark: SparkSession, parquetPath: String,
-      queryName: String, windowLen: String = "1 hour", k: Int = 3): DataFrame = {
+      windowLen: String = "1 hour", k: Int = 3): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val drained = withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = windowedCounts(stream, windowLen).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+      drainStream(spark, windowedCounts(stream, windowLen), "complete")
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("win_start"))
@@ -441,33 +402,52 @@ object EventStreams {
       watermark: String = "1 hour"): DataFrame =
     events.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark(keyCols)
 
-  /** True streaming ingest into a hive-partitioned parquet layout — the
-    * 100 TB pattern that joins the streaming surface to the storage-layout
-    * story: file-source micro-batches → exactly-once `FileStreamSink`
-    * (every committed file listed in the transactional `_spark_metadata`
-    * manifest, so a crashed batch is invisible to readers) →
-    * `partitionBy` directories that q151-style pruned scans read.
-    * `Trigger.AvailableNow` drains everything pending and stops — the
-    * incremental-backfill invocation: re-running with the same
-    * checkpointDir ingests ONLY files that arrived since (offsets live in
-    * the checkpoint), which is how a corpus store tails a landing zone.
+  /** JVM-scoped root for everything the smoke harness writes: staged
+    * landing zones ([[stagedOnce]]), streaming checkpoints and parquet
+    * drain stores ([[drainStream]]). It sits below
+    * [[graft.SparkEntry.scratchRoot]] (tmpfs when the bench redirects
+    * `graft.scratch`, the repo target dir otherwise), never under
+    * `java.io.tmpdir`, and a shutdown hook deletes it, so nothing the
+    * harness writes outlives the JVM.
     *
-    * `fresh = true` clears sink + checkpoint first so a verification run
-    * is one complete deterministic ingest (the driver replays it per
-    * round); production backfills pass `fresh = false`.
+    * Checkpoints are named, never left to Spark: an unnamed streaming
+    * query gets a temporary checkpoint under `java.io.tmpdir` — a DISK
+    * path, and state commits fsync per partition per micro-batch, so the
+    * drain bills the box's disk-sync latency to whatever operator is being
+    * smoked (measured on a slow-disk box: q49's one-batch dedup drain 17 s
+    * with the temp checkpoint on /tmp vs 1.9 s with it on the scratch
+    * root).
     */
+  private[graft] lazy val harnessRoot: String = {
+    val base = java.nio.file.Paths.get(graft.SparkEntry.scratchRoot)
+    java.nio.file.Files.createDirectories(base)
+    val d = java.nio.file.Files.createTempDirectory(base, "graft_harness")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteRecursively(d.toString) catch { case _: Throwable => () }))
+    d.toString
+  }
+  private val harnessCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A path under [[harnessRoot]] that no earlier call returned. Each
+    * drain gets a FRESH checkpoint — reusing one would resume committed
+    * offsets and skip recomputation, which for a measured pass is result
+    * caching, not measurement.
+    */
+  private def freshDir(tag: String): String =
+    s"$harnessRoot/$tag-${harnessCounter.getAndIncrement()}"
+
   /** Shared staged landing zones, memoized per JVM.
     *
-    * The multi-batch smoke harnesses stage their source parquet into a
-    * landing directory (time-split / mod-split single files with forced
-    * mtimes) before every run — input PREP, not the operator under test.
-    * Within one bench or verify JVM the same (source, recipe) staging is
-    * rebuilt many times: q269/q279/q283/q276 all stage events.parquet at
-    * the identical two split timestamps, and the bench runs each query
-    * twice. Each distinct recipe is now staged once per JVM into a private
-    * temp root and reused; a zone is immutable after build (runners only
-    * READ it — state stores and checkpoints live elsewhere), and the temp
-    * root dies with the JVM, so no cross-process staleness is possible.
+    * A file-stream source reads a directory, so the smoke harnesses stage
+    * their source parquet into a landing directory (a plain copy, or
+    * time-split / mod-split single files with forced mtimes) — input PREP,
+    * not the operator under test. Within one bench or verify JVM the same
+    * (source, recipe) staging recurs: q269/q279/q283/q276 all stage
+    * events.parquet at the identical two split timestamps, a dozen queries
+    * read the plain copy, and the bench runs each query twice. Each
+    * distinct recipe is staged once per JVM under [[harnessRoot]] and
+    * reused; a zone is immutable after build (runners only READ it — state
+    * stores and checkpoints live elsewhere).
     *
     * `build` receives a fresh directory that exists and is empty. A failed
     * build is not cached (computeIfAbsent propagates the throw and maps
@@ -476,25 +456,9 @@ object EventStreams {
     */
   private val stagedZones =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val stagedZoneCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private lazy val stagedZoneRoot: String = {
-    // honor the bench's tmpfs scratch redirect (graft.scratch) so staged
-    // zones share the same fast, process-scoped root; default JVM tmpdir
-    // otherwise
-    val d = sys.props.get("graft.scratch") match {
-      case Some(base) =>
-        val b = java.nio.file.Paths.get(base)
-        java.nio.file.Files.createDirectories(b)
-        java.nio.file.Files.createTempDirectory(b, "graft_staged_zones")
-      case None =>
-        java.nio.file.Files.createTempDirectory("graft_staged_zones")
-    }
-    d.toFile.deleteOnExit()
-    d.toString
-  }
   def stagedOnce(key: String)(build: String => Unit): String =
     stagedZones.computeIfAbsent(key, { _ =>
-      val dir = s"$stagedZoneRoot/z${stagedZoneCounter.getAndIncrement()}"
+      val dir = freshDir("zone")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       val t0 = System.nanoTime()
       build(dir)
@@ -503,33 +467,62 @@ object EventStreams {
       dir
     })
 
-  /** JVM-scoped root for the smoke harnesses' streaming checkpoints.
-    *
-    * A streaming query started without a checkpointLocation gets a
-    * TEMPORARY checkpoint under `java.io.tmpdir` — a DISK path, and state
-    * commits fsync per partition per micro-batch, so the drain bills the
-    * box's disk-sync latency to whatever operator is being smoked
-    * (measured on a slow-disk box: q49's one-batch dedup drain 17 s with
-    * the temp checkpoint on /tmp vs 1.9 s with it on the scratch root).
-    * Production always names its checkpoint location; the smokes now do
-    * too, under the same scratch root every other harness write uses
-    * (tmpfs when the bench redirects `graft.scratch`, the repo target dir
-    * otherwise). Each invocation gets a FRESH subdirectory — reusing a
-    * checkpoint would resume committed offsets and skip recomputation,
-    * which for a measured pass is result caching, not measurement. The
-    * root dies with the JVM (shutdown hook), so nothing leaks across runs.
+  /** The staged zone holding a copy of the single parquet `file` — the
+    * directory a file-stream source over that file reads.
     */
-  private lazy val ckptRoot: String = {
-    val base = java.nio.file.Paths.get(graft.SparkEntry.scratchRoot)
-    java.nio.file.Files.createDirectories(base)
-    val d = java.nio.file.Files.createTempDirectory(base, "graft_ckpt")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try deleteRecursively(d.toString) catch { case _: Throwable => () }))
-    d.toString
+  def stagedCopy(file: String): String =
+    stagedOnce(s"copy|$file") { d =>
+      val src = java.nio.file.Paths.get(file)
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(d).resolve(src.getFileName))
+      ()
+    }
+
+  /** Run `df` as a streaming query to completion and return its output —
+    * the one drain every smoke goes through. The query gets its own name
+    * and a fresh checkpoint; the rows land in one of two sinks:
+    *
+    *   - `sink = "memory"`: rows collect through the driver's memory sink,
+    *     are copied into a local frame, and the sink's view is dropped, so
+    *     repeated drains in one session (bench passes, verify) leave no
+    *     view and no in-memory table behind. Any output mode.
+    *   - `sink = "parquet"` (append only; the join smokes' default and the
+    *     production shape): the stream COMMITS to a parquet store — the
+    *     [[runPartitionedIngest]] sink pattern — and the result is read
+    *     BACK from the store, so data-sized output (e.g. stream-stream join
+    *     matches) never funnels through the driver and what gets verified
+    *     is the store's committed contents. The store must outlive this
+    *     call (the returned frame reads it lazily); it lives under
+    *     [[harnessRoot]] and dies with the JVM.
+    */
+  private def drainStream(spark: SparkSession, df: Dataset[_],
+      outputMode: String = "append", sink: String = "memory"): DataFrame = {
+    val n = harnessCounter.getAndIncrement()
+    val dir = s"$harnessRoot/drain-$n"
+    val name = s"graft_drain_$n"
+    val w = df.writeStream.outputMode(outputMode).queryName(name)
+      .option("checkpointLocation", s"$dir/ckpt")
+    val q = sink match {
+      case "memory" => w.format("memory").start()
+      case "parquet" => w.format("parquet").option("path", s"$dir/store").start()
+      case other => throw new IllegalArgumentException(
+        s"drain must be 'parquet' or 'memory', got '$other'")
+    }
+    try {
+      q.processAllAvailable()
+      q.stop()
+      if (sink == "parquet")
+        // explicit schema: a zero-row drain leaves a store with only
+        // _spark_metadata, which schema inference cannot read
+        spark.read.schema(df.schema).parquet(s"$dir/store")
+      else {
+        val t = spark.table(name)
+        spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+      }
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView(name)
+    }
   }
-  private val ckptCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def freshCkpt(tag: String): String =
-    s"$ckptRoot/$tag-${ckptCounter.getAndIncrement()}"
 
   /** Scale-adaptive shuffle/state partition count for a streaming drain:
     * ceil(source bytes / 32 MB), clamped to [1, session
@@ -646,6 +639,21 @@ object EventStreams {
     Seq("spark.sql.shuffle.partitions" ->
       streamShufflePartitions(spark, 256L << 10, srcPaths).toString)
 
+  /** True streaming ingest into a hive-partitioned parquet layout — the
+    * 100 TB pattern that joins the streaming surface to the storage-layout
+    * story: file-source micro-batches → exactly-once `FileStreamSink`
+    * (every committed file listed in the transactional `_spark_metadata`
+    * manifest, so a crashed batch is invisible to readers) →
+    * `partitionBy` directories that q151-style pruned scans read.
+    * `Trigger.AvailableNow` drains everything pending and stops — the
+    * incremental-backfill invocation: re-running with the same
+    * checkpointDir ingests ONLY files that arrived since (offsets live in
+    * the checkpoint), which is how a corpus store tails a landing zone.
+    *
+    * `fresh = true` clears sink + checkpoint first so a verification run
+    * is one complete deterministic ingest (Verify replays it on every
+    * run); production backfills pass `fresh = false`.
+    */
   def runPartitionedIngest(spark: SparkSession, srcParquet: String,
       dstDir: String, checkpointDir: String, partitionCols: Seq[String],
       projectCols: Seq[String], fresh: Boolean = true): Unit = {
@@ -858,25 +866,13 @@ object EventStreams {
     * survivor ROW per key depends on intra-batch order, so callers wanting
     * a deterministic result project the key columns only.
     */
-  def runDedupSmoke(spark: SparkSession, parquetPath: String, queryName: String,
+  def runDedupSmoke(spark: SparkSession, parquetPath: String,
       keyCols: Seq[String]): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath)) {
-      val q = dedupStream(stream, keyCols).writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+      drainStream(spark, dedupStream(stream, keyCols))
     }
   }
 
@@ -894,7 +890,7 @@ object EventStreams {
     * verification harness only.
     */
   def runValidationGateSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, rules: Seq[(String, Column)]): DataFrame = {
+      rules: Seq[(String, Column)]): DataFrame = {
     import graft.operators.Validation
     require(rules.nonEmpty, "validation gate needs at least one rule")
     val schema = Engine.parquetSchema(spark, parquetPath)
@@ -902,18 +898,7 @@ object EventStreams {
     val stream = normalizeTs(schema, raw)
     val aggs = Validation.rulesAgg(rules)
     withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = stream.agg(aggs.head, aggs.tail: _*).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val row = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
+      val row = drainStream(spark, stream.agg(aggs.head, aggs.tail: _*), "complete")
       Validation.rulesReport(row, rules)
     }
   }
@@ -928,33 +913,16 @@ object EventStreams {
     * batch-side as the oracle instrument.
     */
   def runHllStreamSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, valueName: String, b: Int = 6): DataFrame = {
+      valueName: String, b: Int = 6): DataFrame = {
     import graft.operators.Corpus
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val sparse = withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = Corpus.hllRho(raw, col(valueName), b)
-        .groupBy("bucket").agg(max(col("rho")).cast("long").alias("register"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+      drainStream(spark, Corpus.hllRho(raw, col(valueName), b)
+        .groupBy("bucket").agg(max(col("rho")).cast("long").alias("register")), "complete")
     }
-    // materialize the instrument eagerly: callers stage the source into a
-    // temp dir and delete it on return, so nothing may stay lazy over it
-    val neDf = spark.read.schema(schema).parquet(parquetPath)
+    val ne = spark.read.schema(schema).parquet(parquetPath)
       .agg(countDistinct(col(valueName)).alias("n_exact"))
-    val ne = spark.createDataFrame(
-      java.util.Arrays.asList(neDf.collect(): _*), neDf.schema)
     Corpus.hllFinalize(sparse, ne, b)
   }
 
@@ -966,7 +934,7 @@ object EventStreams {
     * the batch SQL verbatim).
     */
   def runOhlcStreamSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, keyCol: String, tieCol: String,
+      keyCol: String, tieCol: String,
       valueExpr: String): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = normalizeTs(schema,
@@ -974,24 +942,11 @@ object EventStreams {
     val ord = struct(col("ts").alias("t"), col(tieCol).alias("tb"))
     val v = expr(valueExpr)
     withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = raw
+      drainStream(spark, raw
         .groupBy(col(keyCol).alias("key"), date_trunc("hour", col("ts")).alias("bucket"))
         .agg(count(lit(1)).alias("n"),
           min_by(v, ord).alias("open"), max_by(v, ord).alias("close"),
-          max(v).alias("high"), min(v).alias("low"), sum(v).alias("sum_v"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+          max(v).alias("high"), min(v).alias("low"), sum(v).alias("sum_v")), "complete")
     }
   }
 
@@ -1004,26 +959,14 @@ object EventStreams {
     * smokes.
     */
   def runBenfordStreamSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, valueExpr: String): DataFrame = {
+      valueExpr: String): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = raw.select(expr(valueExpr).cast("long").alias("v"))
+      val counts = drainStream(spark, raw.select(expr(valueExpr).cast("long").alias("v"))
         .filter(col("v") > 0L)
         .select(substring(col("v").cast("string"), 1, 1).cast("long").alias("digit"))
-        .groupBy("digit").agg(count(lit(1)).alias("n"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val counts = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
+        .groupBy("digit").agg(count(lit(1)).alias("n")), "complete")
       graft.operators.Validation.benfordDecorate(counts)
     }
   }
@@ -1037,33 +980,18 @@ object EventStreams {
     * selecting the two splits from the same source.
     */
   def runDriftStreamSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, category: String, refFilter: String,
+      category: String, refFilter: String,
       curFilter: String): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val curCounts = withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = raw.filter(expr(curFilter))
+      drainStream(spark, raw.filter(expr(curFilter))
         .groupBy(col(category).alias("category"))
-        .agg(count(lit(1)).alias("n_cur"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+        .agg(count(lit(1)).alias("n_cur")), "complete")
     }
-    val refDf = spark.read.schema(schema).parquet(parquetPath).filter(expr(refFilter))
+    val refCounts = spark.read.schema(schema).parquet(parquetPath).filter(expr(refFilter))
       .groupBy(col(category).alias("category"))
       .agg(count(lit(1)).alias("n_ref"))
-    val refRows = java.util.Arrays.asList(refDf.collect(): _*)
-    val refCounts = spark.createDataFrame(refRows, refDf.schema)
     graft.operators.Validation.categoricalDriftCounts(refCounts, curCounts)
   }
 
@@ -1076,38 +1004,22 @@ object EventStreams {
     * append in production (register max is insensitive to either).
     */
   def runHllWindowedSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, valueName: String, windowLen: String = "1 hour",
+      valueName: String, windowLen: String = "1 hour",
       b: Int = 6): DataFrame = {
     import graft.operators.Corpus
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     val sparse = withConfs(spark, smokeConfs(spark, parquetPath)) {
-      val q = Corpus.hllRho(raw, col(valueName), b,
+      drainStream(spark, Corpus.hllRho(raw, col(valueName), b,
           keep = Seq(window(col("ts"), windowLen).getField("start").alias("group")))
         .groupBy("group", "bucket")
-        .agg(max(col("rho")).cast("long").alias("register"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
+        .agg(max(col("rho")).cast("long").alias("register")), "complete")
     }
     val dense = Corpus.hllFinalizeGrouped(sparse, b)
-    // exact-distinct-per-window instrument, materialized eagerly (callers
-    // delete the staged source on return)
-    val neDf = normalizeTs(schema, spark.read.schema(schema).parquet(parquetPath))
+    // exact-distinct-per-window instrument
+    val ne = normalizeTs(schema, spark.read.schema(schema).parquet(parquetPath))
       .groupBy(window(col("ts"), windowLen).getField("start").alias("group"))
       .agg(countDistinct(col(valueName)).alias("n_exact"))
-    val ne = spark.createDataFrame(
-      java.util.Arrays.asList(neDf.collect(): _*), neDf.schema)
     dense.join(ne, Seq("group"), "left")
       .select(col("group").alias("win_start"), col("bucket"),
         col("register"), coalesce(col("n_exact"), lit(0L)).alias("n_exact"))
@@ -1149,23 +1061,11 @@ object EventStreams {
     * deterministic, equals the batch left join (the differential oracle).
     */
   def runStreamEnrichSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, dim: DataFrame, keys: Seq[String]): DataFrame = {
+      dim: DataFrame, keys: Seq[String]): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
-    val q = streamStaticEnrich(stream, dim, keys).writeStream
-      .outputMode("append")
-      .format("memory")
-      .option("checkpointLocation", freshCkpt(queryName))
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val sink = spark.table(queryName)
-    val rows = java.util.Arrays.asList(sink.collect(): _*)
-    val out = spark.createDataFrame(rows, sink.schema)
-    spark.catalog.dropTempView(queryName)
-    out
+    drainStream(spark, streamStaticEnrich(stream, dim, keys))
   }
 
   /** Output row of [[RunningTotalsProcessor]] — the per-user running
@@ -1213,8 +1113,8 @@ object EventStreams {
     * batches_seen proves the multi-batch path (= distinct event_id % 3
     * values per user, deterministic by construction).
     */
-  def runTransformWithStateSmoke(spark: SparkSession, srcParquet: String,
-      queryName: String): DataFrame = {
+  def runTransformWithStateSmoke(spark: SparkSession,
+      srcParquet: String): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val stageDir = stagedOnce(s"mod3|$srcParquet") { dir =>
@@ -1235,9 +1135,7 @@ object EventStreams {
     val confs = eventSmokeConfs(spark, stageDir) :+
       ("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(spark, confs) {
       val keyed = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
         .select(col("user_id").cast("long"),
@@ -1248,18 +1146,7 @@ object EventStreams {
         Encoders.product[UserTotals]
       val out = keyed.transformWithState(new RunningTotalsProcessor,
         TimeMode.None(), OutputMode.Update())
-      val q = out.writeStream
-        .outputMode("update")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val updates = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
+      val updates = drainStream(spark, out, "update")
       // the update log reduced to each key's final emission: max by
       // batches_seen (strictly increasing per key per touched batch)
       updates.groupBy(col("user_id"))
@@ -1268,9 +1155,6 @@ object EventStreams {
         .select(col("user_id"), col("m.n_events").alias("n_events"),
           col("m.value_micros").alias("value_micros"),
           col("m.batches_seen").alias("batches_seen"))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -1339,7 +1223,7 @@ object EventStreams {
     * open sessions at drain end are absent BY RULE.
     */
   def runTimerSessionsSmoke(spark: SparkSession, srcParquet: String,
-      queryName: String, eventType: String,
+      eventType: String,
       gapSeconds: Long, splitTs: Seq[String],
       delay: String = "1 hour"): DataFrame = {
     import org.apache.spark.sql.Encoders
@@ -1349,9 +1233,7 @@ object EventStreams {
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(spark, confs) {
       val keyed = normalizeTs(schema, spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stageDir))
         .withWatermark("ts", delay)
@@ -1365,22 +1247,7 @@ object EventStreams {
       val out = keyed.transformWithState(
         new InactivitySessionProcessor(gapSeconds * 1000L),
         TimeMode.EventTime(), OutputMode.Append())
-      val q = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val res = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      res
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+      drainStream(spark, out)
     }
   }
 
@@ -1396,7 +1263,7 @@ object EventStreams {
     * BY RULE (no-data batches disabled).
     */
   def runChainedStatefulSmoke(spark: SparkSession, srcParquet: String,
-      queryName: String, splitTs: Seq[String],
+      splitTs: Seq[String],
       delay: String = "1 hour"): DataFrame = {
     val (stageDir, schema) = stageTimeSplitFiles(spark, srcParquet, splitTs)
     def stream(): DataFrame =
@@ -1405,9 +1272,7 @@ object EventStreams {
         .withWatermark("ts", delay)
     val confs = eventSmokeConfs(spark, stageDir) :+
       ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(spark, confs) {
       val agg = stream().unionByName(stream())
         .dropDuplicates("event_id")
         .groupBy(window(col("ts"), "1 day").as("w"))
@@ -1416,22 +1281,7 @@ object EventStreams {
             .as("value_micros"))
         .select(unix_micros(col("w.start")).as("day_start_us"),
           col("n_events"), col("value_micros"))
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+      drainStream(spark, agg)
     }
   }
 
@@ -1492,83 +1342,16 @@ object EventStreams {
     * l_ts + window < min(max left ts, max right ts before the last split
     * boundary) − delay.
     *
-    * Scale shape: state is watermark-bounded on both sides; the staging
-    * write is the verification harness, not the operator.
-    */
-  /** `joinType` extends the contract to "full_outer": an unmatched RIGHT
+    * `joinType` extends the contract to "full_outer": an unmatched RIGHT
     * row evicts (and emits null-extended) when r_ts < watermark — a
     * matching left row would need l_ts ∈ [r_ts − window, r_ts], all of
     * which is behind the watermark and thus can no longer arrive.
-    */
-  /** Drain an append-mode streaming frame synchronously and return the
-    * materialized result.
     *
-    *   - `drain = "parquet"` (the default for the join smokes, and the
-    *     production shape): the stream COMMITS to a parquet store with a
-    *     checkpoint — the [[runPartitionedIngest]] sink pattern — and the
-    *     result is read BACK from the store, so data-sized output (e.g.
-    *     stream-stream join matches) never funnels through the driver and
-    *     what gets verified is the store's committed contents, exactly
-    *     what a downstream consumer would read.
-    *   - `drain = "memory"`: the original smoke harness — output rows
-    *     collect through the driver's memory sink. Kept for the
-    *     complete-mode aggregate smokes (state is bounded there) and for
-    *     the StreamingSpec equality pin between the two drains.
-    *
-    * The parquet store lives under the bench's tmpfs scratch when
-    * redirected (`graft.scratch`), a JVM temp dir otherwise; it must
-    * outlive this call (the returned frame reads from it lazily), so it
-    * dies with the scratch cleanup / the JVM, not with the query.
+    * Scale shape: state is watermark-bounded on both sides; the staging
+    * write is the verification harness, not the operator.
     */
-  private def drainAppend(spark: SparkSession, joined: DataFrame,
-      queryName: String, drain: String): DataFrame = drain match {
-    case "memory" =>
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", freshCkpt(queryName))
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      if (sys.props.get("graft.debug.stream").contains("1"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[drain] batch=${p.batchId} rows=${p.numInputRows} wm=${p.eventTime.get("watermark")} max=${p.eventTime.get("max")}"))
-      q.stop()
-      val sink = spark.table(queryName)
-      val rows = java.util.Arrays.asList(sink.collect(): _*)
-      val out = spark.createDataFrame(rows, sink.schema)
-      spark.catalog.dropTempView(queryName)
-      out
-    case "parquet" =>
-      val base = sys.props.get("graft.scratch") match {
-        case Some(b) =>
-          val p = java.nio.file.Paths.get(b)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, s"drain_$queryName")
-        case None => java.nio.file.Files.createTempDirectory(s"drain_$queryName")
-      }
-      val store = s"$base/store"
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", store)
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      q.processAllAvailable()
-      if (sys.props.get("graft.debug.stream").contains("1"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[drain] batch=${p.batchId} rows=${p.numInputRows} wm=${p.eventTime.get("watermark")} max=${p.eventTime.get("max")}"))
-      q.stop()
-      // explicit schema: a zero-match drain leaves a store with only
-      // _spark_metadata, which schema inference cannot read
-      spark.read.schema(joined.schema).parquet(store)
-    case other =>
-      throw new IllegalArgumentException(
-        s"drain must be 'parquet' or 'memory', got '$other'")
-  }
-
   def runStreamLeftOuterJoinSmoke(spark: SparkSession, srcParquet: String,
-      queryName: String, key: String,
+      key: String,
       leftType: String, rightType: String, windowSeconds: Long,
       splitTs: Seq[String], delay: String = "1 hour",
       joinType: String = "left_outer", drain: String = "parquet"): DataFrame = {
@@ -1596,7 +1379,7 @@ object EventStreams {
     // state instantiation; measured on q269, see OPTIMIZATION_r12.md.
     withConfs(spark, eventSmokeConfs(spark, stageDir) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
-      drainAppend(spark, joined, queryName, drain)
+      drainStream(spark, joined, sink = drain)
     }
   }
 
@@ -1617,7 +1400,7 @@ object EventStreams {
 
   /** Drain [[streamStreamJoin]] over one parquet directory read as TWO
     * independent file streams (left rows `event_type = leftType`, right
-    * rows `event_type = rightType`), synchronously through [[drainAppend]]
+    * rows `event_type = rightType`), synchronously through [[drainStream]]
     * — a committed parquet store read back (default; join output is
     * data-sized, so the production path keeps it off the driver) or a
     * memory sink. Inner-join output is append-only and
@@ -1625,7 +1408,7 @@ object EventStreams {
     * deterministic and equals the batch join — the differential oracle
     * the driver replays in DuckDB.
     */
-  def runStreamJoinSmoke(spark: SparkSession, parquetPath: String, queryName: String,
+  def runStreamJoinSmoke(spark: SparkSession, parquetPath: String,
       keys: Seq[String], leftType: String, rightType: String,
       windowSeconds: Long, drain: String = "parquet"): DataFrame = {
     val schema = Engine.parquetSchema(spark, parquetPath)
@@ -1643,7 +1426,7 @@ object EventStreams {
     // finite drain doesn't need).
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
-      drainAppend(spark, joined, queryName, drain)
+      drainStream(spark, joined, sink = drain)
     }
   }
 
@@ -1652,6 +1435,12 @@ object EventStreams {
     * a single file), draining it synchronously into a memory sink (the
     * local smoke pattern); returns the materialized result.
     */
+  def runStreamingSmoke(spark: SparkSession, parquetPath: String): DataFrame = {
+    val schema = Engine.parquetSchema(spark, parquetPath)
+    val stream = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
+    drainStream(spark, windowedCounts(stream))
+  }
+
   /** Ordered funnel analysis: for each user, the earliest time each stage
     * was reached STRICTLY AFTER the previous stage (stage 1 = earliest
     * matching event at all). A user's t columns cascade: once a stage is
@@ -2846,7 +2635,7 @@ object EventStreams {
     val lock = new Object
     val q = src.writeStream
       .outputMode("append")
-      .option("checkpointLocation", freshCkpt("lsh_ingest"))
+      .option("checkpointLocation", freshDir("lsh_ingest"))
       .foreachBatch { (batch: DataFrame, _: Long) => lock.synchronized {
         val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val idx =
@@ -2869,24 +2658,6 @@ object EventStreams {
     q.stop()
     val rows = java.util.Arrays.asList(results.toSeq: _*)
     spark.createDataFrame(rows, outSchema)
-  }
-
-  def runStreamingSmoke(spark: SparkSession, parquetPath: String, queryName: String): DataFrame = {
-    val schema = Engine.parquetSchema(spark, parquetPath)
-    val raw = spark.readStream.schema(schema).parquet(parquetPath)
-    // Under spark.sql.legacy.parquet.nanosAsLong a TIMESTAMP(NANOS) column
-    // arrives as int64 nanos; rebuild the microsecond timestamp (integer
-    // division — a double div would lose precision on int64 nanos).
-    val stream = normalizeTs(schema, raw)
-    val q = windowedCounts(stream).writeStream
-      .outputMode("append")
-      .format("memory")
-      .option("checkpointLocation", freshCkpt(queryName))
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
   }
 
   /** Cross-correlation function between two aligned integer series at lags

@@ -35,7 +35,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "events.parquet"))
     // Compare on rounded sums: streaming and batch accumulate doubles in
     // different orders, so raw total_value can differ in the last ulp.
-    val streamed = EventStreams.runStreamingSmoke(spark, dir, "graft_stream_test")
+    val streamed = EventStreams.runStreamingSmoke(spark, dir)
       .select($"win_start", $"event_type", $"n", round($"total_value", 4).as("tv"))
     val batch = EventStreams.windowedCounts(loadBatch)
       .select($"win_start", $"event_type", $"n", round($"total_value", 4).as("tv"))
@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
-    val streamed = EventStreams.runSessionizeSmoke(spark, dir, "graft_sess_test", gapMinutes = 30)
+    val streamed = EventStreams.runSessionizeSmoke(spark, dir, gapMinutes = 30)
 
     // Batch reference: micro-precision gap sessions, excluding each user's
     // last session (still open — single batch, watermark never passes it).
@@ -241,7 +241,7 @@ class StreamingSpec extends SparkSpec {
       .select($"event_id", to_timestamp($"tss").as("ts"), $"user_id", $"event_type")
       .write.mode("overwrite").parquet(src)
     val out = EventStreams.runTimerSessionsSmoke(spark, src,
-        "graft_tmr_test", "view", 600L,
+        "view", 600L,
         Seq("2024-01-01 02:00:00", "2024-01-01 04:00:00"), "1 hour")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val t0010 = java.time.Instant.parse("2024-01-01T00:10:00Z").toEpochMilli * 1000L
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
     Seq((3L, 1L, 1.25), (4L, 1L, 2.5), (5L, 1L, 0.125), (6L, 2L, 7.0))
       .toDF("event_id", "user_id", "value")
       .write.mode("overwrite").parquet(src)
-    val out = EventStreams.runTransformWithStateSmoke(spark, src, "graft_tws_test")
+    val out = EventStreams.runTransformWithStateSmoke(spark, src)
       .orderBy($"user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(out == Seq(
@@ -287,7 +287,7 @@ class StreamingSpec extends SparkSpec {
       .select($"event_id", to_timestamp($"tss").as("ts"), $"user_id", $"event_type")
       .write.mode("overwrite").parquet(src)
     val out = EventStreams.runStreamLeftOuterJoinSmoke(spark, src,
-        "graft_loj_test", "user_id", "view", "purchase", 600L,
+        "user_id", "view", "purchase", 600L,
         Seq("2024-01-01 02:00:00", "2024-01-01 04:00:00"), "1 hour")
       .select($"l_event_id", $"r_event_id").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
@@ -297,7 +297,7 @@ class StreamingSpec extends SparkSpec {
     // evicts (r_ts < 02:50) and emits null-extended; unmatched
     // purchase@03:50 (u8) is inside the horizon — retained, absent
     val fo = EventStreams.runStreamLeftOuterJoinSmoke(spark, src,
-        "graft_foj_test", "user_id", "view", "purchase", 600L,
+        "user_id", "view", "purchase", 600L,
         Seq("2024-01-01 02:00:00", "2024-01-01 04:00:00"), "1 hour",
         joinType = "full_outer")
       .select($"l_event_id", $"r_event_id").collect()
@@ -311,7 +311,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
-    val streamed = EventStreams.runStreamJoinSmoke(spark, dir, "graft_ssj_test",
+    val streamed = EventStreams.runStreamJoinSmoke(spark, dir,
         Seq("user_id"), leftType = "click", rightType = "purchase", windowSeconds = 1800)
       .select($"l_event_id", $"r_event_id")
     val b = loadBatch
@@ -337,7 +337,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
     def innerVia(drain: String) =
-      EventStreams.runStreamJoinSmoke(spark, dir, s"graft_deq_$drain",
+      EventStreams.runStreamJoinSmoke(spark, dir,
           Seq("user_id"), leftType = "click", rightType = "purchase",
           windowSeconds = 1800, drain = drain)
         .select($"l_event_id", $"r_event_id")
@@ -346,7 +346,7 @@ class StreamingSpec extends SparkSpec {
     assert(ip.exceptAll(im).count() == 0 && im.exceptAll(ip).count() == 0)
     def outerVia(drain: String) =
       EventStreams.runStreamLeftOuterJoinSmoke(spark,
-          s"$dir/events.parquet", s"graft_deq_loj_$drain", "user_id",
+          s"$dir/events.parquet", "user_id",
           "view", "purchase", 7200L,
           Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00"), "1 hour",
           drain = drain)
@@ -365,7 +365,7 @@ class StreamingSpec extends SparkSpec {
     val dim = loadBatch.select($"user_id").distinct()
       .filter($"user_id" % 2 === 0)
       .withColumn("segment", concat(lit("seg"), $"user_id" % 3))
-    val streamed = EventStreams.runStreamEnrichSmoke(spark, dir, "graft_sse_test",
+    val streamed = EventStreams.runStreamEnrichSmoke(spark, dir,
         dim, Seq("user_id"))
       .select($"event_id", $"segment")
     val batch = loadBatch.join(dim, Seq("user_id"), "left")
@@ -558,7 +558,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val vexpr = "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
       val streamed = EventStreams.runOhlcStreamSmoke(spark, dir,
-          "graft_ohlc_stream_test", "event_type", "event_id", vexpr)
+          "event_type", "event_id", vexpr)
         .orderBy("key", "bucket").collect().toSeq
       val batch = EventStreams.ohlcBars(loadBatch, col("event_type"),
           col("ts"), col("event_id"), expr(vexpr))
@@ -939,7 +939,7 @@ class StreamingSpec extends SparkSpec {
     val df = (1 to 500).map(i => (i.toLong, s"u${i % 313}")).toDF("id", "user")
     df.write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runHllStreamSmoke(
-        spark, s"$dir/data.parquet", "graft_hllstream_test", "user")
+        spark, s"$dir/data.parquet", "user")
       .orderBy("bucket").collect()
     val batch = Corpus.hllSketch(spark.read.parquet(s"$dir/data.parquet"), $"user")
       .orderBy("bucket").collect()
@@ -955,7 +955,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("id", "cat")
     df.write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runDriftStreamSmoke(spark, s"$dir/data.parquet",
-        "graft_driftstream_test", "cat", "id % 2 = 0", "id % 2 = 1")
+        "cat", "id % 2 = 0", "id % 2 = 1")
       .orderBy("category").collect()
     val src = spark.read.parquet(s"$dir/data.parquet")
     val batch = Validation.categoricalDrift(
@@ -972,7 +972,7 @@ class StreamingSpec extends SparkSpec {
     val df = (1 to 400).map(i => (i.toLong, (i * i).toLong)).toDF("id", "v")
     df.write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runBenfordStreamSmoke(
-        spark, s"$dir/data.parquet", "graft_benford_test", "v")
+        spark, s"$dir/data.parquet", "v")
       .orderBy("digit").collect()
     val batch = Validation.benfordAudit(
         spark.read.parquet(s"$dir/data.parquet"), $"v")
@@ -991,7 +991,7 @@ class StreamingSpec extends SparkSpec {
     }
     rows.toDF("ts", "user").write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runHllWindowedSmoke(
-        spark, s"$dir/data.parquet", "graft_hllwin_test", "user")
+        spark, s"$dir/data.parquet", "user")
       .orderBy("win_start", "bucket").collect()
     val batch = Corpus.hllSketchGrouped(
         spark.read.parquet(s"$dir/data.parquet"),
@@ -1015,7 +1015,7 @@ class StreamingSpec extends SparkSpec {
       "v_cap_400" -> ($"v" > 400.0),
       "kind_domain" -> !$"kind".isin("a", "b"))
     val streamed = EventStreams.runValidationGateSmoke(
-        spark, s"$dir/data.parquet", "graft_vgate_test", rules)
+        spark, s"$dir/data.parquet", rules)
       .orderBy("rule").collect()
     val batch = Validation.checkRules(spark.read.parquet(s"$dir/data.parquet"), rules)
       .orderBy("rule").collect()
@@ -1041,7 +1041,7 @@ class StreamingSpec extends SparkSpec {
     rows.map { case (u, ms, et) => (u, new java.sql.Timestamp(ms), et) }
       .toDF("user_id", "ts", "event_type")
       .repartition(1).write.parquet(s"$dir/in")
-    EventStreams.runFunnelSmoke(spark, s"$dir/in", s"graft_$name", funnelStages)
+    EventStreams.runFunnelSmoke(spark, s"$dir/in", funnelStages)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
   }
@@ -1487,5 +1487,88 @@ class StreamingSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(d4, "marker.txt")))
     assert(built.get == 3)
+  }
+
+  private val splitTs = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00")
+
+  test("withConfs lock: a stateful smoke's confs never show inside another locked region") {
+    // runChainedStatefulSmoke sets noDataMicroBatches=false; while another
+    // thread holds withConfs(noDataMicroBatches=true), it must wait for
+    // the lock instead of overriding the conf mid-region
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    // the first run stages the split files, so the concurrent run below
+    // reaches its conf overrides at once
+    val expected = EventStreams.runChainedStatefulSmoke(spark, eventsPath, splitTs)
+      .collect().toSet
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val smoke = scala.concurrent.Future {
+      started.await()
+      EventStreams.runChainedStatefulSmoke(spark, eventsPath, splitTs).collect().toSet
+    }(scala.concurrent.ExecutionContext.global)
+    var sawFalse = false
+    EventStreams.withConfs(spark, Seq(noData -> "true")) {
+      started.countDown()
+      val deadline = System.nanoTime() + 5000000000L
+      while (!smoke.isCompleted && System.nanoTime() < deadline) {
+        sawFalse ||= spark.conf.get(noData) == "false"
+        Thread.sleep(2)
+      }
+    }
+    import scala.concurrent.duration._
+    assert(scala.concurrent.Await.result(smoke, 5.minutes) == expected)
+    assert(!sawFalse, s"$noData read false inside a locked withConfs region")
+  }
+
+  test("harness writes stay under the harness root: a parquet drain adds nothing to java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def leaked = tmp.list().filter(n => n.startsWith("drain_") || n.startsWith("graft_staged")).toSet
+    val before = leaked
+    val dir = EventStreams.stagedCopy(eventsPath)
+    val out = EventStreams.runStreamJoinSmoke(spark, dir, Seq("user_id"),
+      leftType = "click", rightType = "purchase", windowSeconds = 1800, drain = "parquet")
+    assert(out.count() > 0)
+    assert((leaked -- before).isEmpty, s"new entries in $tmp: ${leaked -- before}")
+    val root = java.nio.file.Paths.get(EventStreams.harnessRoot)
+    assert(java.nio.file.Paths.get(dir).startsWith(root))
+    assert(root.startsWith(java.nio.file.Paths.get(SparkEntry.scratchRoot)))
+  }
+
+  test("every smoke drains without leaving a temporary view behind") {
+    val dir = EventStreams.stagedCopy(eventsPath)
+    val dim = spark.range(0, 50).select($"id".as("user_id"), lit("s").as("segment"))
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val smokes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "runStreamingSmoke" -> (() => EventStreams.runStreamingSmoke(spark, dir)),
+      "runSessionizeSmoke" -> (() => EventStreams.runSessionizeSmoke(spark, dir)),
+      "runWindowedTopK" -> (() => EventStreams.runWindowedTopK(spark, dir)),
+      "runDedupSmoke" -> (() => EventStreams.runDedupSmoke(spark, dir, Seq("user_id"))),
+      "runValidationGateSmoke" -> (() => EventStreams.runValidationGateSmoke(
+        spark, dir, Seq("value_positive" -> ($"value" <= 0.0)))),
+      "runHllStreamSmoke" -> (() => EventStreams.runHllStreamSmoke(spark, dir, "event_id")),
+      "runOhlcStreamSmoke" -> (() => EventStreams.runOhlcStreamSmoke(
+        spark, dir, "event_type", "event_id", "event_id")),
+      "runBenfordStreamSmoke" -> (() => EventStreams.runBenfordStreamSmoke(spark, dir, "event_id")),
+      "runDriftStreamSmoke" -> (() => EventStreams.runDriftStreamSmoke(
+        spark, dir, "event_type", "user_id % 2 = 0", "user_id % 2 = 1")),
+      "runHllWindowedSmoke" -> (() => EventStreams.runHllWindowedSmoke(spark, dir, "event_id")),
+      "runStreamEnrichSmoke" -> (() => EventStreams.runStreamEnrichSmoke(
+        spark, dir, dim, Seq("user_id"))),
+      "runFunnelSmoke" -> (() => EventStreams.runFunnelSmoke(spark, dir, funnelStages)),
+      "runTransformWithStateSmoke" -> (() =>
+        EventStreams.runTransformWithStateSmoke(spark, eventsPath)),
+      "runTimerSessionsSmoke" -> (() => EventStreams.runTimerSessionsSmoke(
+        spark, eventsPath, "purchase", 21600L, splitTs)),
+      "runChainedStatefulSmoke" -> (() =>
+        EventStreams.runChainedStatefulSmoke(spark, eventsPath, splitTs)),
+      "runStreamJoinSmoke" -> (() => EventStreams.runStreamJoinSmoke(spark, dir,
+        Seq("user_id"), "click", "purchase", 1800L, drain = "memory")),
+      "runStreamLeftOuterJoinSmoke" -> (() => EventStreams.runStreamLeftOuterJoinSmoke(
+        spark, eventsPath, "user_id", "view", "purchase", 7200L, splitTs,
+        drain = "memory")))
+    smokes.foreach { case (name, run) =>
+      val before = views
+      run().collect()
+      assert((views -- before).isEmpty, s"$name left ${views -- before}")
+    }
   }
 }
