@@ -138,11 +138,9 @@ object Corpus {
     *
     * Returns (id, n_tokens, seq_id, seq_offset).
     *
-    * Scale shape: the global running sum is NOT a single-partition window —
-    * ids bucket by `id / bucketSize`, per-bucket subtotals get prefix-summed
-    * in a window over the tiny bucket frame (n/bucketSize rows), and each
-    * row's global offset = its bucket's offset + a bucket-local window.
-    * Two narrow shuffles; every window partition is bounded by bucketSize.
+    * Scale shape: the global running sum is a
+    * [[graft.operators.Relational.prefixScan]] over `id / bucketSize`
+    * blocks, so every window partition is bounded by bucketSize.
     * (Cumulative totals stay exact in Long; floor-div is exact below 2^53
     * tokens — 100 TB of text is ~25T tokens, far inside the bound.)
     */
@@ -150,16 +148,9 @@ object Corpus {
       bucketSize: Long = 4096): DataFrame = {
     require(ctxLen > 0 && bucketSize > 0, "ctxLen and bucketSize must be positive")
     val base = df.select(id.alias("id"), tokenCount.cast("long").alias("n_tokens"))
-      .withColumn("bucket", floor(col("id") / bucketSize).cast("long"))
-    val partials = base.groupBy("bucket").agg(sum(col("n_tokens")).alias("bw"))
-    val wOff = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials
-      .withColumn("boff", coalesce(sum(col("bw")).over(wOff), lit(0L)))
-      .select("bucket", "boff")
-    val wIn = Window.partitionBy("bucket").orderBy("id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base.join(offsets, "bucket")
-      .withColumn("cum_before", col("boff") + coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
+    Relational.prefixScan(base, floor(col("id") / bucketSize).cast("long"), Seq(col("id")),
+        "cum_before" -> col("n_tokens"))
+      .withColumn("cum_before", col("cum_before") - coalesce(col("n_tokens"), lit(0L)))
       .select(col("id"), col("n_tokens"),
         floor(col("cum_before") / ctxLen).cast("long").alias("seq_id"),
         (col("cum_before") % ctxLen).alias("seq_offset"))
@@ -693,6 +684,7 @@ object Corpus {
       .withColumn("score0", score0)
       .orderBy(col("score0").desc, col("ta"), col("tb"))
       .limit(k)
+    // unpartitioned window, bounded: top-k rows
     val w = Window.orderBy(col("score0").desc, col("ta"), col("tb"))
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1587,6 +1579,7 @@ object Corpus {
         s"CAST((CAST(${budget}L AS DECIMAL(38,0)) * w) DIV tw AS BIGINT) AS base",
         s"CAST((CAST(${budget}L AS DECIMAL(38,0)) * w) % tw AS BIGINT) AS rem")
     val short = based.agg((lit(budget) - sum(col("base"))).alias("leftover"))
+    // unpartitioned window, bounded: one row per group
     val w = Window.orderBy(col("rem").desc, col("group"))
     based.crossJoin(broadcast(short))
       .withColumn("__rk", row_number().over(w).cast("long"))

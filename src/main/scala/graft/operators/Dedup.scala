@@ -1350,16 +1350,14 @@ object Dedup {
     * [1, w-1], id_a at the lower rank; total order (key, id) makes ranks —
     * and therefore the pair set — engine- and layout-independent.
     *
-    * Scale shape: the global rank is two-level, the [[graft.operators.Corpus.packSequences]]
-    * pattern — rows bucket by the key's top bits (monotone in the signed
-    * order, so bucket boundaries respect it), rank locally per bucket, and
-    * add per-bucket offsets from a bucket-count frame that is `buckets`
-    * rows tiny (its window is single-partition over that tiny frame only —
-    * never over the corpus). Pair generation explodes each row into its
-    * `w-1` forward rank targets and equi-joins rank = target: one narrow
-    * shuffle, no range join, no cross product. Keys are uniformly spread
-    * for hash-shaped sort keys; a skewed key family would need
-    * quantile-based bucket bounds instead (documented tradeoff).
+    * Scale shape: the global rank is a
+    * [[graft.operators.Relational.prefixScan]] bucketed by the key's top
+    * bits (monotone in the signed order, so bucket boundaries respect it).
+    * Pair generation explodes each row into its `w-1` forward rank
+    * targets and equi-joins rank = target: one narrow shuffle, no range
+    * join, no cross product. Keys are uniformly spread for hash-shaped
+    * sort keys; a skewed key family would need quantile-based bucket
+    * bounds instead (documented tradeoff).
     */
   def sortedNeighborhoodPairs(df: DataFrame, id: Column, sortKey: Column,
       w: Int, buckets: Int = 1024): DataFrame = {
@@ -1368,17 +1366,10 @@ object Dedup {
       s"buckets must be a power of two >= 2, got $buckets")
     val shift = 64 - java.lang.Integer.numberOfTrailingZeros(buckets)
     val base = df.select(id.cast("long").alias("id"), sortKey.cast("long").alias("k"))
-      // arithmetic shift is monotone in the signed order; +buckets/2 maps
-      // the signed range onto [0, buckets)
-      .withColumn("bkt", shiftright(col("k"), shift) + lit(buckets / 2))
-    val partials = base.groupBy(col("bkt")).agg(count(lit(1)).alias("bn"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials
-      .withColumn("boff", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .select(col("bkt"), col("boff"))
-    val wIn = Window.partitionBy(col("bkt")).orderBy(col("k"), col("id"))
-    val ranked = base.join(broadcast(offsets), "bkt")
-      .withColumn("rank", col("boff") + row_number().over(wIn).cast("long"))
+    // arithmetic shift is monotone in the signed order; +buckets/2 maps
+    // the signed range onto [0, buckets)
+    val ranked = Relational.prefixScan(base, shiftright(col("k"), shift) + lit(buckets / 2),
+        Seq(col("k"), col("id")), "rank" -> lit(1L))
       .select(col("id"), col("k"), col("rank"))
     val probes = ranked
       .withColumn("d", explode(sequence(lit(1), lit(w - 1))))
@@ -1417,12 +1408,12 @@ object Dedup {
     * `inter * 1e6 >= tPpm * union` on the candidate pairs only. Returns
     * (id_a, id_b, inter, jac_ppm) with id_a < id_b, floor-division ppm.
     *
-    * Scale shape: the vocabulary rank is one window over the VOCAB-sized
-    * frequency table (bounded state, the BPE-vocab argument — at true
-    * web scale swap in the two-level rank); per-doc prefix selection is a
-    * doc-partitioned window; candidates flow through one token-keyed
-    * equi-join carrying ids only; the token arrays move ONCE, in the
-    * verification join by id. Prefix length shrinks as t grows — at
+    * Scale shape: the vocabulary rank is a
+    * [[graft.operators.Relational.prefixScan]] over range partitions of
+    * the frequency table; per-doc prefix selection is a doc-partitioned
+    * window; candidates flow through one token-keyed equi-join carrying
+    * ids only; the token arrays move ONCE, in the verification join by
+    * id. Prefix length shrinks as t grows — at
     * t=0.8 a 100-token doc indexes 21 tokens, not 100.
     */
   def ppJoinPairs(df: DataFrame, id: Column, tokens: Column,
@@ -1441,24 +1432,14 @@ object Dedup {
     val freq = d.select(explode(col("tk")).alias("token"))
       .groupBy("token").agg(count(lit(1)).alias("tf"))
     // Global rarity rank WITHOUT a vocab-sized single-partition window
-    // (web-scale vocabularies run to 1e9 tokens): range-partition the
-    // (tf, token) order, row_number within each partition in parallel,
-    // and add broadcast per-partition offsets — the two-level rank. The
-    // offsets window is partition-count-sized (bounded state); ranks are
+    // (web-scale vocabularies run to 1e9 tokens): a prefix scan bucketed
+    // by the range partition of the (tf, token) order. Ranks are
     // boundary-placement-independent because (tf, token) is unique per
     // row, so the total order is the same wherever the sampler cuts.
-    val ranked = {
-      val parts = freq.repartitionByRange(64, col("tf"), col("token"))
-        .withColumn("pid", spark_partition_id())
-      val wOff = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = parts.groupBy(col("pid")).agg(count(lit(1)).alias("pn"))
-        .withColumn("poff", coalesce(sum(col("pn")).over(wOff), lit(0L)))
-        .select(col("pid"), col("poff"))
-      val wIn = Window.partitionBy(col("pid")).orderBy(col("tf"), col("token"))
-      parts.join(broadcast(offsets), "pid")
-        .withColumn("rk", (col("poff") + row_number().over(wIn)).cast("long"))
-        .select(col("token"), col("rk"))
-    }
+    val ranked = Relational.prefixScan(
+        freq.repartitionByRange(64, col("tf"), col("token")),
+        spark_partition_id(), Seq(col("tf"), col("token")), "rk" -> lit(1L))
+      .select(col("token"), col("rk"))
     // ---- dictionary-encode docs to sorted integer rank arrays ----------
     // Ascending rk == rarity order (rk 1 is the rarest token), so a doc's
     // PREFIX is simply the first p elements of its sorted rank array —

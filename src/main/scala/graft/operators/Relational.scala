@@ -567,6 +567,7 @@ object Relational {
       counts.crossJoin(broadcast(tot))
         .orderBy(col("cnt").desc, col("key"))
         .limit(k)
+        // unpartitioned window, bounded: top-k rows
         .withColumn("rank",
           row_number().over(
             org.apache.spark.sql.expressions.Window
@@ -949,6 +950,7 @@ object Relational {
         .agg(
           sum(when(label === labelA, 1L).otherwise(0L)).alias("c_a"),
           sum(when(label === labelB, 1L).otherwise(0L)).alias("c_b"))
+      // unpartitioned window, UNBOUNDED: distinct-value-sized (see the scale note)
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("v")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = counts
@@ -1060,6 +1062,7 @@ object Relational {
         .withColumn("u", col("__u")).drop("__u", "__w")
         .orderBy(col("priority").asc, id.asc)
         .limit(k)
+        // unpartitioned window, bounded: top-k rows
         .withColumn("sample_rank",
           row_number().over(Window.orderBy(col("priority").asc, id.asc))
             .cast("long"))
@@ -1318,6 +1321,60 @@ object Relational {
     go(0, b.length)
   }
 
+  /** Probe-balanced bucket of `df`'s long column `key`: `buckets - 1`
+    * approxQuantile probes over the key's distribution, then
+    * [[probeBucket]]. The bucket is non-decreasing in `key`, so it can
+    * carry a [[prefixScan]] over any order that leads with `key`; unlike
+    * key top-bits it splits any distribution evenly, even one packed into
+    * a narrow range. Probes only balance buckets, so the epsilon never
+    * reaches an exact caller's output. Loose epsilon and a modest bucket
+    * count on purpose — A/B at sf0.1 (100k events) under the old HOF
+    * probe: 256 bounds at eps 0.001 cost 9.3 s, 64 at 0.02 cost 2.4 s,
+    * identical output; raise `buckets` with cluster size, not precision.
+    * Runs the probe scan eagerly.
+    */
+  def quantileBucket(df: DataFrame, key: String, buckets: Int): Column = {
+    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
+    val bounds = df.stat.approxQuantile(key,
+      (1 until buckets).map(_.toDouble / buckets).toArray, 0.02)
+      .map(_.toLong).distinct.sorted
+    probeBucket(col(key), bounds)
+  }
+
+  /** Running sums over a total order without a global single-partition
+    * window. For each `(name, value)` it appends `name`, the inclusive sum
+    * of `value` over every row at or before this one in `order` (nulls
+    * count as 0). A rank is the running sum of `lit(1L)`; an exclusive sum
+    * is the inclusive one minus the row's own value.
+    *
+    * Two levels over the caller's `bucket`, which must be non-null and
+    * non-decreasing in `order` (a null bucket drops its rows): per-bucket
+    * partials, one offset window over the bucket-sized partial frame (the
+    * only unpartitioned window), a broadcast join of the offsets, and a
+    * ROWS running window inside each bucket. The bucketing decides balance
+    * only — probe quantiles ([[quantileBucket]]), key top bits, range
+    * partition ids, id blocks — and never reaches a sum. `order` must be
+    * total: ties make a ROWS frame layout-dependent.
+    */
+  def prefixScan(df: DataFrame, bucket: Column, order: Seq[Column],
+      sums: (String, Column)*): DataFrame = {
+    require(sums.nonEmpty, "prefixScan needs at least one (name, value) sum")
+    val ix = sums.indices
+    val vals = sums.map { case (_, v) => coalesce(v, lit(0L)) }
+    val keyed = df.withColumn("__ps_b", bucket)
+    val partials = ix.map(i => sum(vals(i)).alias(s"__ps_p$i"))
+    val wOff = Window.orderBy(col("__ps_b")).rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = keyed.groupBy(col("__ps_b")).agg(partials.head, partials.tail: _*)
+      .select(col("__ps_b") +: ix.map(i =>
+        coalesce(sum(col(s"__ps_p$i")).over(wOff), lit(0L)).alias(s"__ps_o$i")): _*)
+    val wIn = Window.partitionBy(col("__ps_b")).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    keyed.join(broadcast(offsets), Seq("__ps_b"))
+      .withColumns(scala.collection.immutable.ListMap(ix.map(i =>
+        sums(i)._1 -> (col(s"__ps_o$i") + sum(vals(i)).over(wIn))): _*))
+      .drop(("__ps_b" +: ix.map(i => s"__ps_o$i")): _*)
+  }
+
   /** Exact rank-proportional quantile binning: every row's bin is
     * `floor((rank - 1) * nBins / n)` under the total order (value, id) —
     * the feature-bucketing transform (deciles, percentile caps) computed
@@ -1327,23 +1384,13 @@ object Relational {
     *
     * Returns (id, v, rank, bin).
     *
-    * Scale shape: the global rank is two-level like
-    * [[graft.operators.Dedup.sortedNeighborhoodPairs]], but the buckets
-    * come from `approxQuantile` probes over the VALUE distribution (a
-    * bounded driver-side array, the kmeans-centroid precedent) rather
-    * than key top-bits — a value domain packed into a narrow range would
-    * land top-bit buckets in one partition, while quantile probes split
-    * any distribution evenly. Probe placement only balances partitions;
-    * the rank — and with it every output value — is exact wherever the
-    * bounds land, so approxQuantile's epsilon never reaches the output.
-    * One scan for the probes, one bucket-keyed window, a buckets-sized
-    * offset frame, a 1-row count broadcast.
+    * Scale shape: the rank is a [[prefixScan]] over [[quantileBucket]]s
+    * of the value — one probe scan, one bucket-keyed window, a 1-row
+    * count broadcast.
     */
   def quantileBins(df: DataFrame, id: Column, value: Column, nBins: Int,
-      buckets: Int = 64, probeEps: Double = 0.02): DataFrame = {
+      buckets: Int = 64): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    require(probeEps > 0 && probeEps <= 0.5, s"probeEps must be in (0, 0.5], got $probeEps")
     // NOT spread (A/B-rejected in r12): round-robin-repartitioning `base`
     // before the probe scan looked like a win for q250's two single-task
     // 100k-row passes, but it 4x'd q246's decisionStump (interleaved: 2.0-
@@ -1352,24 +1399,8 @@ object Relational {
     // per consumer subtree instead of reused. The single-task probe pass
     // is the cheaper evil at this size; revisit only with a keyed spread.
     val base = df.select(id.cast("long").alias("id"), value.cast("long").alias("v"))
-    // loose epsilon + modest bucket count on purpose: probes only balance
-    // partitions (see above) — A/B at sf0.1 (100k events) under the old
-    // HOF probe: 256 bounds at eps 0.001 cost 9.3 s, 64 at 0.02 cost
-    // 2.4 s, identical output. probeBucket made the per-row search
-    // log-cost, but 64 still splits 32 cores fine; raise `buckets` with
-    // cluster size, not precision.
-    val bounds = base.stat.approxQuantile("v",
-      (1 until buckets).map(_.toDouble / buckets).toArray, probeEps)
-      .map(_.toLong).distinct.sorted
-    val bucketed = base.withColumn("bkt", probeBucket(col("v"), bounds))
-    val partials = bucketed.groupBy(col("bkt")).agg(count(lit(1)).alias("bn"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials
-      .withColumn("boff", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .select(col("bkt"), col("boff"))
-    val wIn = Window.partitionBy(col("bkt")).orderBy(col("v"), col("id"))
-    val ranked = bucketed.join(broadcast(offsets), "bkt")
-      .withColumn("rank", col("boff") + row_number().over(wIn).cast("long"))
+    val ranked = prefixScan(base, quantileBucket(base, "v", buckets),
+      Seq(col("v"), col("id")), "rank" -> lit(1L))
     val n = base.agg(count(lit(1)).alias("n"))
     ranked.crossJoin(broadcast(n))
       .select(col("id"), col("v"), col("rank"),
@@ -1912,16 +1943,11 @@ object Relational {
     * peak concurrency; the d = +1 rows alone give each interval's
     * concurrency-at-admission.
     *
-    * Scale shape: the global running sum uses the two-level pattern
-    * ([[quantileBins]]): boundaries bucket by approxQuantile probes on t,
-    * per-bucket partial sums broadcast as offsets, the window runs per
-    * bucket — no global single-partition window; probe epsilon balances
-    * buckets but never reaches any output value.
+    * Scale shape: `active` and `seq` are one [[prefixScan]] over
+    * [[quantileBucket]]s of t.
     */
   def concurrencyProfile(df: DataFrame, id: Column, start: Column,
-      end: Column, buckets: Int = 64, probeEps: Double = 0.02): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    require(probeEps > 0 && probeEps <= 0.5, s"probeEps must be in (0, 0.5], got $probeEps")
+      end: Column, buckets: Int = 64): DataFrame = {
     // spread: the boundary frame is consumed three times (quantile probe,
     // bucket partials, the bucketed windows) with the per-row bucket
     // search fused in — single-split inputs would run each pass one-core
@@ -1929,44 +1955,11 @@ object Relational {
         start.cast("long").alias("t"), lit(1L).alias("d"))
       .union(df.select(id.cast("long").alias("id"),
         end.cast("long").alias("t"), lit(-1L).alias("d"))))
-    val bounds = b.stat.approxQuantile("t",
-      (1 until buckets).map(_.toDouble / buckets).toArray, probeEps)
-      .map(_.toLong).distinct.sorted
-    val bucketed = b.withColumn("bkt", probeBucket(col("t"), bounds))
-    val partials = bucketed.groupBy(col("bkt"))
-      .agg(sum(col("d")).alias("bs"), count(lit(1)).alias("bn"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials
-      .withColumn("off", coalesce(sum(col("bs")).over(wOff), lit(0L)))
-      .withColumn("roff", coalesce(sum(col("bn")).over(wOff), lit(0L)))
-      .select(col("bkt"), col("off"), col("roff"))
-    val wIn = Window.partitionBy(col("bkt")).orderBy(col("t"), col("d"), col("id"))
-    bucketed.join(broadcast(offsets), Seq("bkt"))
-      .withColumn("active", col("off") +
-        sum(col("d")).over(wIn.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("seq", col("roff") + row_number().over(wIn).cast("long"))
+    prefixScan(b, quantileBucket(b, "t", buckets),
+        Seq(col("t"), col("d"), col("id")), "active" -> col("d"), "seq" -> lit(1L))
       .select(col("seq"), col("t"), col("d"), col("id"), col("active"))
   }
 
-  /** Join-cardinality and skew estimate WITHOUT executing the join — the
-    * planner-style diagnostic that decides, before a 100 TB join runs,
-    * whether its output explodes (many-to-many key blowup) and whether one
-    * key dominates (the salting trigger for [[GraftOps.saltedJoin]]).
-    * Exact, not a sketch: |A ⋈ B| = Σ_k cA(k)·cB(k) over the per-key
-    * histograms, which cost two partial-agg groupBys (key-cardinality
-    * sized — tiny next to the join itself) plus a histogram-sized
-    * equi-join; the candidate output NEVER materializes.
-    *
-    * Returns one row: (est_rows, n_keys_left, n_keys_right,
-    * n_matched_keys, max_key, max_key_rows, max_share_ppm) — max_key is
-    * the heaviest-output key (smallest key wins ties, via the
-    * `min(struct(-rows, key))` argmax), max_share_ppm its floor-division
-    * share of the estimated output (the skew threshold a pipeline
-    * compares against 1e6/shuffle-partitions before choosing a salted
-    * plan). Keys are compared as longs; NULL keys never match in an
-    * equi-join and are excluded from both histograms, matching the join
-    * they predict.
-    */
   /** Zone-map (per-file min/max statistics) skip report: QUANTIFIES what a
     * sort-by-value layout buys a range predicate BEFORE anyone rewrites
     * 100 TB. Rows are assigned to `nFiles` equal files two ways — arrival
@@ -2032,26 +2025,21 @@ object Relational {
     *
     * Returns (id, x, y) of the frontier rows.
     *
-    * Scale shape: the strictly-smaller-x running max uses the two-level
-    * pattern ([[quantileBins]]): x bucketed by approxQuantile probes,
-    * per-bucket max-y partials broadcast as preceding-bucket offsets, the
-    * in-bucket strict max as a RANGE ... -1 frame per bucket — no global
-    * single-partition window, no O(n²) dominance join; probe epsilon
-    * balances buckets but never reaches any output value. Equal x always
-    * land in one bucket (bucket is a function of x), so the equal-x group
-    * max is bucket-local too.
+    * Scale shape: the strictly-smaller-x running max is two-level over
+    * [[quantileBucket]]s of x — per-bucket max-y partials broadcast as
+    * preceding-bucket offsets, the in-bucket strict max as a RANGE ... -1
+    * frame — with no global single-partition window and no O(n²)
+    * dominance join. Equal x always land in one bucket (bucket is a
+    * function of x), so the equal-x group max is bucket-local too.
     */
   def skyline2D(df: DataFrame, id: Column, minimizeX: Column, maximizeY: Column,
-      buckets: Int = 64, probeEps: Double = 0.02): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    require(probeEps > 0 && probeEps <= 0.5, s"probeEps must be in (0, 0.5], got $probeEps")
+      buckets: Int = 64): DataFrame = {
     val base = df.select(id.cast("long").alias("id"),
       minimizeX.cast("long").alias("x"), maximizeY.cast("long").alias("y"))
-    val bounds = base.stat.approxQuantile("x",
-      (1 until buckets).map(_.toDouble / buckets).toArray, probeEps)
-      .map(_.toLong).distinct.sorted
-    val bucketed = base.withColumn("bkt", probeBucket(col("x"), bounds))
+    val bucketed = base.withColumn("bkt", quantileBucket(base, "x", buckets))
     val partials = bucketed.groupBy(col("bkt")).agg(max(col("y")).alias("bm"))
+    // not prefixScan: a running MAX over a strict RANGE frame has no exact
+    // sum formulation, and prefixScan's offset arithmetic is additive
     val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
     val offsets = partials
       .withColumn("pm", max(col("bm")).over(wOff))
@@ -2068,6 +2056,25 @@ object Relational {
       .select(col("id"), col("x"), col("y"))
   }
 
+  /** Join-cardinality and skew estimate WITHOUT executing the join — the
+    * planner-style diagnostic that decides, before a 100 TB join runs,
+    * whether its output explodes (many-to-many key blowup) and whether one
+    * key dominates (the salting trigger for [[GraftOps.saltedJoin]]).
+    * Exact, not a sketch: |A ⋈ B| = Σ_k cA(k)·cB(k) over the per-key
+    * histograms, which cost two partial-agg groupBys (key-cardinality
+    * sized — tiny next to the join itself) plus a histogram-sized
+    * equi-join; the candidate output NEVER materializes.
+    *
+    * Returns one row: (est_rows, n_keys_left, n_keys_right,
+    * n_matched_keys, max_key, max_key_rows, max_share_ppm) — max_key is
+    * the heaviest-output key (smallest key wins ties, via the
+    * `min(struct(-rows, key))` argmax), max_share_ppm its floor-division
+    * share of the estimated output (the skew threshold a pipeline
+    * compares against 1e6/shuffle-partitions before choosing a salted
+    * plan). Keys are compared as longs; NULL keys never match in an
+    * equi-join and are excluded from both histograms, matching the join
+    * they predict.
+    */
   def joinCardinalityEstimate(left: DataFrame, leftKey: Column,
       right: DataFrame, rightKey: Column): DataFrame = {
     val lh = left.filter(leftKey.isNotNull)

@@ -92,6 +92,7 @@ object Retrieval {
     bm25Score(df, id, terms, query, k1, b)
       .orderBy(col("score").desc, col("id"))
       .limit(k)
+      // unpartitioned window, bounded: top-k rows
       .withColumn("rank",
         row_number().over(Window.orderBy(col("score").desc, col("id"))).cast("long"))
       .select(col("rank"), col("id"), col("score"))
@@ -184,6 +185,7 @@ object Retrieval {
       .withColumn("rrf", contrib(col("rank_a")) + contrib(col("rank_b")))
       .orderBy(col("rrf").desc, col("id"))
       .limit(k)
+      // unpartitioned window, bounded: top-k rows
       .withColumn("rank",
         row_number().over(Window.orderBy(col("rrf").desc, col("id"))).cast("long"))
       .select(col("rank"), col("id"), col("rank_a"), col("rank_b"), col("rrf"))

@@ -439,33 +439,18 @@ object Validation {
     *
     * Scale shape: one partial-agg groupBy collapses the corpus to the
     * score histogram; the strictly-below running sum over the histogram
-    * uses the two-level pattern ([[graft.operators.Relational.quantileBins]]:
-    * probe-bucketed partials broadcast as offsets, per-bucket window) — no
-    * global single-partition window, no per-row rank materialization.
+    * is a [[graft.operators.Relational.prefixScan]] — no per-row rank
+    * materialization.
     */
   def rocAuc(df: DataFrame, score: Column, label: Column,
-      buckets: Int = 64, probeEps: Double = 0.02): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    require(probeEps > 0 && probeEps <= 0.5, s"probeEps must be in (0, 0.5], got $probeEps")
+      buckets: Int = 64): DataFrame = {
     val base = df.select(score.cast("long").alias("s"),
       when(label, 1L).otherwise(0L).alias("p"))
     val h = base.groupBy(col("s")).agg(
       sum(col("p")).alias("cp"), sum(lit(1L) - col("p")).alias("cn"))
-    val bounds = h.stat.approxQuantile("s",
-      (1 until buckets).map(_.toDouble / buckets).toArray, probeEps)
-      .map(_.toLong).distinct.sorted
-    val bucketed = h.withColumn("bkt",
-      Relational.probeBucket(col("s"), bounds))
-    val partials = bucketed.groupBy(col("bkt")).agg(sum(col("cn")).alias("bs"))
-    val wOff = Window.orderBy(col("bkt")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials
-      .withColumn("off", coalesce(sum(col("bs")).over(wOff), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wIn = Window.partitionBy(col("bkt")).orderBy(col("s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(broadcast(offsets), Seq("bkt"))
-      .withColumn("nb", col("off") + coalesce(sum(col("cn")).over(wIn), lit(0L)))
+    Relational.prefixScan(h, Relational.quantileBucket(h, "s", buckets),
+        Seq(col("s")), "nb" -> col("cn"))
+      .withColumn("nb", col("nb") - col("cn"))
       .agg(
         sum(col("cp")).alias("n_pos"), sum(col("cn")).alias("n_neg"),
         count(lit(1)).alias("n_scores"),
@@ -906,6 +891,7 @@ object Validation {
       .groupBy(col("bin"))
       .agg(sum(col("p")).alias("bp"), sum(lit(1L) - col("p")).alias("bn"))
     val tot = perBin.agg(sum(col("bp")).alias("tp"), sum(col("bn")).alias("tn"))
+    // unpartitioned window, bounded: nBins rows
     val w = Window.orderBy(col("bin")).rowsBetween(Window.unboundedPreceding, 0)
     // threshold candidates = edges; the split at edges(i) keeps bins 0..i left
     val scored = perBin
@@ -1661,6 +1647,19 @@ object Validation {
                 END""").alias("rho2_signed_ppm"))
   }
 
+  /** Equal-count score buckets WITHOUT a global row_number: the global
+    * rank is a [[graft.operators.Relational.prefixScan]] bucketed by the
+    * distinct score; bucket = ((rank−1)·buckets) DIV n + 1. Input needs
+    * (sc, tb) columns; adds (rank, bucket, n).
+    */
+  private def rankBuckets(base: DataFrame, buckets: Int): DataFrame = {
+    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
+    val n = base.agg(count(lit(1)).alias("n"))
+    Relational.prefixScan(base, col("sc"), Seq(col("sc"), col("tb")), "rank" -> lit(1L))
+      .crossJoin(broadcast(n))
+      .withColumn("bucket", expr(s"((rank - 1) * $buckets) DIV n + 1"))
+  }
+
   /** Uplift-by-decile report with the cumulative Qini curve: units are
     * ranked by `score` (ties broken by `tie` — the pair must totally
     * order units), split into `buckets` equal-count bins, and each bin
@@ -1673,38 +1672,10 @@ object Validation {
     * evaluation pair (Radcliffe's Qini). Sign-split ppm floors; NULL when
     * a side is empty.
     *
-    * Scale shape: the global rank is NOT a global window — per-score
-    * counts aggregate first (bounded by distinct scores), a broadcast
-    * cumulative offset places each score block, and row_number within a
-    * score partition finishes the rank; the only unpartitioned windows
-    * run over the `buckets`-row aggregate and the distinct-score count
-    * frame.
+    * Scale shape: the global rank is [[rankBuckets]]' prefix scan, not a
+    * global window; the only unpartitioned windows run over the
+    * `buckets`-row aggregate and the distinct-score offset frame.
     */
-  /** Equal-count score buckets WITHOUT a global row_number: per-score
-    * counts aggregate first (bounded by distinct scores), a broadcast
-    * cumulative offset places each score block, and row_number within a
-    * score partition finishes the global rank; bucket =
-    * ((rank−1)·buckets) DIV n + 1. Input needs (sc, tb) columns; adds
-    * (rank, bucket, n).
-    */
-  private def rankBuckets(base: DataFrame, buckets: Int): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val wSc = org.apache.spark.sql.expressions.Window.orderBy(col("sc"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("sc")).agg(count(lit(1)).alias("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wSc), lit(0L)))
-      .withColumn("n", sum(col("c")).over(
-        org.apache.spark.sql.expressions.Window
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .select(col("sc"), col("off"), col("n"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sc")).orderBy(col("tb"))
-    base.join(broadcast(offsets), "sc")
-      .withColumn("rank", col("off") + row_number().over(wIn))
-      .withColumn("bucket", expr(s"((rank - 1) * $buckets) DIV n + 1"))
-  }
-
   def upliftDeciles(df: DataFrame, score: Column, tie: Column, treat: Column,
       outcome: Column, buckets: Int = 10): DataFrame = {
     val base = df.select(score.cast("long").alias("sc"),
@@ -1719,6 +1690,7 @@ object Validation {
           .alias("ct"),
         sum(when(col("tr") === 0, col("oc")).otherwise(0L)).cast(d)
           .alias("cc"))
+    // unpartitioned window, bounded: `buckets` rows
     val wB = org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     per
@@ -1757,6 +1729,7 @@ object Validation {
     val per = rankBuckets(base, buckets)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).alias("n"), sum(col("sc")).alias("bucket_sum"))
+    // unpartitioned windows, bounded: `buckets` rows
     val wCum = org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val wAll = org.apache.spark.sql.expressions.Window
@@ -1793,6 +1766,7 @@ object Validation {
         sum(when(col("g") === 1, col("ev")).otherwise(0L)).alias("d1"),
         count(lit(1)).alias("m"),
         sum(when(col("g") === 1, 1L).otherwise(0L)).alias("m1"))
+    // unpartitioned window, bounded by distinct durations, not subjects
     val wSuf = org.apache.spark.sql.expressions.Window.orderBy(col("t"))
       .rowsBetween(0, org.apache.spark.sql.expressions.Window.unboundedFollowing)
     steps
@@ -1877,6 +1851,7 @@ object Validation {
       .groupBy(col("bucket"))
       .agg(sum(col("y")).alias("pos"),
         (count(lit(1)) - sum(col("y"))).alias("neg"))
+    // unpartitioned windows, bounded: `buckets` rows
     val wSuf = org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))
       .rowsBetween(0, org.apache.spark.sql.expressions.Window.unboundedFollowing)
     val wAll = org.apache.spark.sql.expressions.Window

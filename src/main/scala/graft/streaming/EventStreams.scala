@@ -1792,6 +1792,7 @@ object EventStreams {
       .agg(count(lit(1)).alias("n_ending"),
         sum(when(!col("censored"), 1L).otherwise(0L)).alias("churned"),
         sum(when(col("censored"), 1L).otherwise(0L)).alias("censored_at"))
+    // unpartitioned window, bounded: one row per distinct lifetime in days
     val wSuffix = Window.orderBy(col("lifetime").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     hist

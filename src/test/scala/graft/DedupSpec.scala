@@ -255,7 +255,7 @@ class DedupSpec extends SparkSpec {
     // blocks die with an executor; Some(dir) must route round state
     // through reliable DataFrame.checkpoint files under dir instead —
     // identical labels, and the dir is actually used
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     // maxLocalEdges=0: checkpoint files are a distributed-phase artifact
     // (the driver path has no round state to persist)

@@ -197,7 +197,7 @@ class ExplainAuditSpec extends SparkSpec {
   }
 
   test("Diag plan writes one formatted plan per known query and skips an unknown name") {
-    val out = java.nio.file.Files.createTempDirectory("diag-plan")
+    val out = java.nio.file.Paths.get(tempDir("diag-plan"))
     Diag.plan(spark, sfDir, out.toString, "t", Seq("q02_filter", "q_no_such_query"))
     val written = out.toFile.list().toSeq
     assert(written == Seq("q02_filter_t.txt"))

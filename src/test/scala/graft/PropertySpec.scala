@@ -561,6 +561,29 @@ object RelationalProps extends Properties("relational") {
       }
     }
 
+  property("prefixScan equals the single-partition running-sum window for 1, 2 and many buckets") =
+    forAll(Gen.listOf(Gen.zip(Gen.choose(0, 7), Gen.option(Gen.choose(-9L, 9L))))) { rows0 =>
+      import spark.implicits._
+      import org.apache.spark.sql.expressions.Window
+      import graft.operators.Relational
+      // few keys, so heavy ties on the leading order key; id makes it total
+      val rows = rows0.zipWithIndex.map { case ((k, v), i) => (k, i.toLong, v) }
+      val df = rows.toDF("k", "id", "v")
+      val order = Seq(col("k"), col("id"))
+      val naive = Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      def sums(d: DataFrame) = d.select(col("id"), col("s"), col("r")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      def agrees(d: DataFrame): Boolean = {
+        val want = sums(d.withColumn("s", sum(coalesce(col("v"), lit(0L))).over(naive))
+          .withColumn("r", sum(lit(1L)).over(naive)))
+        Seq(lit(0), (col("k") >= 4).cast("int"), col("k")).forall { b =>
+          sums(Relational.prefixScan(d, b, order, "s" -> col("v"), "r" -> lit(1L))) == want
+        }
+      }
+      agrees(df) && agrees(df.filter(lit(false)))
+    }
+
   property("skipgramCounts: total pairs = Σ_docs Σ_d max(0, len-d)") =
     forAll(Gen.nonEmptyListOf(Gen.nonEmptyListOf(Gen.oneOf("a", "b", "c"))),
       Gen.choose(1, 3)) { (docs, w) =>

@@ -71,7 +71,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted IVF index serves the same answers as the inline build (trained path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val dir = tempDir("graft_ivf_idx")
     val queries = corpus.filter($"id" < 3)
     // trained (k-means) quantizer — the production path, not the fixture:
     // the stored layout must not change the answer at ANY nprobe (pruned
@@ -497,7 +497,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted NSW index serves the same answers as the inline walk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nsw_idx").toString
+    val dir = tempDir("graft_nsw_idx")
     val cents = corpus.filter($"id" < 4)
       .select($"id".cast("int").as("cell"), $"v".as("cv"))
     val edges = Similarity.nswBuildGraph(corpus, cents, nprobe = 2, degree = 4)

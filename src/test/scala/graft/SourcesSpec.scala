@@ -20,9 +20,6 @@ import graft.functions.ColFns
   */
 class SourcesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
   /** `df` as ONE parquet file at `path` (the testdata layout), replacing
     * whatever file was there.
     */
@@ -69,7 +66,7 @@ class SourcesSpec extends SparkSpec {
 
   test("Engine.table: a repeated read of one file plans with no Spark job, same schema and rows") {
     import spark.implicits._
-    val dir = tmpDir("graft-schema")
+    val dir = tempDir("graft-schema")
     writeFile(Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "v"), s"$dir/t.parquet")
     // the first read infers the schema (a job); the second reuses it
     assert(jobsDuring(Engine.table(spark, dir, "t"))._2 >= 1)
@@ -82,7 +79,7 @@ class SourcesSpec extends SparkSpec {
 
   test("Engine.table: a rewritten file is re-inferred") {
     import spark.implicits._
-    val dir = tmpDir("graft-schema-rw")
+    val dir = tempDir("graft-schema-rw")
     writeFile(Seq((1L, "a")).toDF("id", "s"), s"$dir/t.parquet")
     assert(Engine.table(spark, dir, "t").columns.toSeq == Seq("id", "s"))
     writeFile(Seq((1L, 2.0, 3)).toDF("id", "x", "y"), s"$dir/t.parquet")
@@ -99,7 +96,7 @@ class SourcesSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = tmpDir("graft-schema-conf")
+    val dir = tempDir("graft-schema-conf")
     // written by plain parquet-mr: a Spark-written file carries its Spark
     // schema in the footer, which inference prefers over binaryAsString
     val msg = MessageTypeParser.parseMessageType(
@@ -120,7 +117,7 @@ class SourcesSpec extends SparkSpec {
 
   test("Engine.parquetSchema: a directory is re-inferred after it is overwritten") {
     import spark.implicits._
-    val dir = tmpDir("graft-schema-dir")
+    val dir = tempDir("graft-schema-dir")
     Engine.writeParquet(Seq((1L, "a")).toDF("id", "s"), s"$dir/d")
     val d = new java.io.File(s"$dir/d")
     val mtime = d.lastModified()
@@ -133,14 +130,14 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Engine.table: a missing path still raises Spark's AnalysisException") {
-    val dir = tmpDir("graft-schema-missing")
+    val dir = tempDir("graft-schema-missing")
     val e = intercept[AnalysisException](Engine.table(spark, dir, "nope"))
     assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
     intercept[AnalysisException](Engine.parquetSchema(spark, s"$dir/nope.parquet"))
   }
 
   test("readCsv: header names + inferred int schema, then the test.scm pipeline") {
-    val dir = tmpDir("graft-csv")
+    val dir = tempDir("graft-csv")
     // /root/reference/example.csv:1-3 verbatim
     Files.write(java.nio.file.Paths.get(s"$dir/example.csv"),
       "a,b,c\n1,2,3\n20,10,50\n".getBytes("UTF-8"))
@@ -156,7 +153,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned write: a partition-column filter prunes at planning time") {
-    val dir = tmpDir("graft-part")
+    val dir = tempDir("graft-part")
     import spark.implicits._
     val df = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0), (4L, "c", 40.0))
       .toDF("id", "src", "v")
@@ -170,7 +167,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction collapses a fragmented partition to one file, same rows") {
-    val dir = tmpDir("graft-compact")
+    val dir = tempDir("graft-compact")
     import spark.implicits._
     // 40 rows sprayed across 8 tasks => up to 8 files per partition dir
     val df = (1L to 40L).map(i => (i, if (i % 2 == 0) "a" else "b", i * 1.5))
@@ -215,7 +212,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("parquet and csv writers round-trip; json source reads lines") {
-    val dir = tmpDir("graft-rt")
+    val dir = tempDir("graft-rt")
     import spark.implicits._
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
     Engine.writeParquet(df, s"$dir/p")
@@ -230,7 +227,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc and json writers round-trip; orc scan gets pushdown + pruning") {
-    val dir = tmpDir("graft-orc")
+    val dir = tempDir("graft-orc")
     import spark.implicits._
     val df = Seq((1L, "x", 10.0), (2L, "y", 20.0), (3L, "z", 30.0)).toDF("id", "s", "v")
     Engine.writeOrc(df, s"$dir/o")
@@ -247,7 +244,7 @@ class SourcesSpec extends SparkSpec {
 
   test("forgetRewrite: forgotten keys gone, survivors byte-identical, layout preserved") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_forget").toString
+    val base = tempDir("graft_forget")
     val df = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0), (4L, "b", 40.0))
       .toDF("uid", "part", "v")
     Engine.writeParquetPartitioned(df, s"$base/src", Seq("part"))
@@ -264,7 +261,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("readParquetMerged: additive schema evolution unions footers, old files pad NULL") {
-    val dir = tmpDir("graft-evo")
+    val dir = tempDir("graft-evo")
     import spark.implicits._
     // batch 1 written before the column existed; batch 2 after
     Engine.writeParquet(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),

@@ -8,4 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.create("graft-test", "local[4]", 4)
+
+  /** A fresh fixture directory under [[graft.streaming.EventStreams.harnessRoot]],
+    * whose JVM shutdown hook deletes it: specs leave nothing in
+    * `java.io.tmpdir`.
+    */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.streaming.EventStreams.harnessRoot), prefix)
+      .toAbsolutePath.toString
 }

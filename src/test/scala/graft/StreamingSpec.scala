@@ -29,7 +29,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming smoke over parquet matches the batch aggregation") {
     // FileStreamSource needs a directory: stage the single file into one.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sessionizeStream (flatMapGroupsWithState) emits every closed session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_stream").toString
+    val dir = tempDir("graft_sess_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -80,7 +80,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sessionizeStream timeout path: watermark evicts idle users' open sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_timeout").toString
+    val dir = tempDir("graft_sess_timeout")
     def writeBatch(name: String, rows: Seq[(Long, java.sql.Timestamp)]): Unit =
       rows.toDF("user_id", "ts").repartition(1).write.parquet(s"$dir/stage_$name")
         .ensuring(_ => true) // staged then moved so the source sees whole files
@@ -137,7 +137,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sessionizeStream retainCounters=false: timeout drops state, returning user restarts at seq 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_nocounter").toString
+    val dir = tempDir("graft_sess_nocounter")
     def writeBatch(name: String, rows: Seq[(Long, java.sql.Timestamp)]): Unit =
       rows.toDF("user_id", "ts").repartition(1).write.parquet(s"$dir/stage_$name")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -184,7 +184,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupStream: duplicates within the watermark horizon are dropped across batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_stream").toString
+    val dir = tempDir("graft_dedup_stream")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
     def writeBatch(name: String, rows: Seq[(Long, String, java.sql.Timestamp)]): Unit = {
@@ -228,7 +228,7 @@ class StreamingSpec extends SparkSpec {
     //    rows processed BEFORE expired timers re-arm the horizon, so u4
     //    does NOT fire — the ordering this test exists to pin
     //  - u9: view@05:00 in b2 -> open, absent
-    val src = java.nio.file.Files.createTempDirectory("graft_tmr_src").toString
+    val src = tempDir("graft_tmr_src")
     Seq(
       (1L, "2024-01-01 00:05:00", 4L, "view"),
       (2L, "2024-01-01 00:10:00", 1L, "view"),
@@ -251,7 +251,7 @@ class StreamingSpec extends SparkSpec {
   test("transformWithState: running totals survive batch boundaries (RocksDB store)") {
     // user 1's events land in all three event_id % 3 batches, user 2's in
     // one — the final emissions must show exact totals AND the batch span
-    val src = java.nio.file.Files.createTempDirectory("graft_tws_src").toString
+    val src = tempDir("graft_tws_src")
     Seq((3L, 1L, 1.25), (4L, 1L, 2.5), (5L, 1L, 0.125), (6L, 2L, 7.0))
       .toDF("event_id", "user_id", "value")
       .write.mode("overwrite").parquet(src)
@@ -273,7 +273,7 @@ class StreamingSpec extends SparkSpec {
     //  - view@03:00 (user 3): unmatched, window end 03:10 > 02:50 -> stays in state, ABSENT by rule
     //  - an 'other'@05:00 row forms the last batch but reaches NEITHER
     //    watermark node: it advances nothing — also pinned here
-    val src = java.nio.file.Files.createTempDirectory("graft_loj_src").toString
+    val src = tempDir("graft_loj_src")
     Seq(
       (1L, "2024-01-01 00:10:00", 1L, "view"),
       (2L, "2024-01-01 00:30:00", 2L, "view"),
@@ -307,7 +307,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamStreamJoin: finite drain equals the batch time-range join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj").toString
+    val dir = tempDir("graft_ssj")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -332,7 +332,7 @@ class StreamingSpec extends SparkSpec {
     // reads the store back (data-sized output never funnels through the
     // driver); this pin keeps it answer-identical to the memory-sink
     // harness for both the inner and the outer (watermark-evicted) paths
-    val dir = java.nio.file.Files.createTempDirectory("graft_drain_eq").toString
+    val dir = tempDir("graft_drain_eq")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -357,7 +357,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamStaticEnrich: finite drain equals the batch LEFT join, keeps dim-less facts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sse").toString
+    val dir = tempDir("graft_sse")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -551,7 +551,7 @@ class StreamingSpec extends SparkSpec {
 
   test("runOhlcStreamSmoke: streamed bars equal the batch aggregate row for row") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_ohlc_stream").toString
+    val dir = tempDir("graft_ohlc_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(eventsPath),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -795,7 +795,7 @@ class StreamingSpec extends SparkSpec {
       (4L, near + "three"),               // ~0, ~2 (third batch)
       (5L, (1 to 14).map(i => s"filler$i").mkString(" "))
     )
-    val dir = java.nio.file.Files.createTempDirectory("lsh_ingest_spec")
+    val dir = java.nio.file.Paths.get(tempDir("lsh_ingest_spec"))
     try {
       // three 2-doc batches with strictly increasing mod times
       docs.grouped(2).zipWithIndex.foreach { case (chunk, i) =>
@@ -841,7 +841,7 @@ class StreamingSpec extends SparkSpec {
 
   test("runPartitionedIngest: exactly-once partitioned layout, incremental second drain") {
     import graft.streaming.EventStreams
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dir = tempDir("graft_ingest")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
     def land(name: String, rows: Seq[(Long, String, Double)]): Unit = {
       rows.toDF("id", "kind", "v").repartition(1).write.parquet(s"$dir/stage_$name")
@@ -868,7 +868,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("runKeyedUpsert: max-seq merge across batches — a LATER batch with an OLDER seq loses") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
     def land(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
       rows.toDF("k", "seq", "tie", "payload").repartition(1)
@@ -906,7 +906,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming view maintenance: out-of-order retraction converges; versioned store") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm").toString
+    val dir = tempDir("graft_ivm")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/landing"))
     def land(name: String, rows: Seq[(String, Long, Boolean)]): Unit = {
       rows.toDF("k", "v", "del").repartition(1).write.parquet(s"$dir/stage_$name")
@@ -935,7 +935,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming HLL: drained registers equal the batch sketch") {
     import graft.operators.Corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_hllstream").toString
+    val dir = tempDir("graft_hllstream")
     val df = (1 to 500).map(i => (i.toLong, s"u${i % 313}")).toDF("id", "user")
     df.write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runHllStreamSmoke(
@@ -950,7 +950,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming categorical drift: drained counts equal the batch drift report") {
     import graft.operators.Validation
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_driftstream").toString
+    val dir = tempDir("graft_driftstream")
     val df = (1 to 300).map(i => (i.toLong, if (i % 2 == 0) s"c${i % 3}" else s"c${i % 5}"))
       .toDF("id", "cat")
     df.write.parquet(s"$dir/data.parquet")
@@ -968,7 +968,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming Benford: drained digit counts decorate into the exact batch report") {
     import graft.operators.Validation
-    val dir = java.nio.file.Files.createTempDirectory("graft_benford").toString
+    val dir = tempDir("graft_benford")
     val df = (1 to 400).map(i => (i.toLong, (i * i).toLong)).toDF("id", "v")
     df.write.parquet(s"$dir/data.parquet")
     val streamed = EventStreams.runBenfordStreamSmoke(
@@ -983,7 +983,7 @@ class StreamingSpec extends SparkSpec {
 
   test("windowed streaming HLL: per-window registers equal the batch grouped sketch") {
     import graft.operators.Corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_hllwin").toString
+    val dir = tempDir("graft_hllwin")
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     val rows = (1 to 300).map { i =>
       val ts = new java.sql.Timestamp(base.getTime + (i % 3) * 3600L * 1000)
@@ -1006,7 +1006,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming validation gate: final report equals the batch checkRules report") {
     import graft.operators.Validation
-    val dir = java.nio.file.Files.createTempDirectory("graft_vgate").toString
+    val dir = tempDir("graft_vgate")
     val df = Seq((1L, 10.0, "a"), (2L, -3.0, "b"), (3L, 500.0, "a"), (4L, 7.0, "zz"))
       .toDF("id", "v", "kind")
     df.write.parquet(s"$dir/data.parquet")
@@ -1037,7 +1037,7 @@ class StreamingSpec extends SparkSpec {
     "purchase" -> (col("event_type") === "purchase"))
 
   private def runFunnel(name: String, rows: Seq[(Long, Long, String)]): Set[(Long, Long, Long, Long)] = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    val dir = tempDir(s"graft_$name")
     rows.map { case (u, ms, et) => (u, new java.sql.Timestamp(ms), et) }
       .toDF("user_id", "ts", "event_type")
       .repartition(1).write.parquet(s"$dir/in")
