@@ -31,15 +31,17 @@ import graft.streaming.EventStreams
 object SparkEntry {
 
   /** Scratch root for queries whose CONTRACT includes a write (format
-    * round-trips, streaming stores/checkpoints, compaction). Default: the
-    * repo's target dir; the `graft.scratch` system property (or
-    * SPARK_GRAFT_SCRATCH) overrides it. Bench and Diag move it to tmpfs
-    * through [[useTmpfsScratch]]; Verify keeps the disk default —
-    * correctness is location-independent.
+    * round-trips, streaming stores/checkpoints, compaction). Default:
+    * `target/graft-scratch` under the working directory (`user.dir`), so
+    * each checkout writes into its own `target/`; the `graft.scratch`
+    * system property (or SPARK_GRAFT_SCRATCH) overrides it. Bench and Diag
+    * move it to tmpfs through [[useTmpfsScratch]]; Verify keeps the disk
+    * default — correctness is location-independent.
     */
   def scratchRoot: String =
     sys.props.getOrElse("graft.scratch",
-      sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/root/repo/target/graft-scratch"))
+      sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+        java.nio.file.Paths.get(sys.props("user.dir"), "target", "graft-scratch").toString))
 
   /** Point [[scratchRoot]] at a per-process tmpfs directory when no root
     * was chosen (neither `graft.scratch` nor SPARK_GRAFT_SCRATCH is set)

@@ -399,7 +399,7 @@ private[graft] object SparkEntryQueriesA {
       Dedup.embeddingCosinePairs(e.selectCols(Seq(col("vec_id").as("id"), col("embedding").as("v"))),
           col("id"), col("v"), threshold = 0.4)
         .withColumn("cosine", round(col("cosine"), 6))
-        .sortBy(Seq(col("id_a"), col("id_b")))
+        .sortByStaged(Seq(col("id_a"), col("id_b")))
     }),
 
     "q38_ann_ivf" -> ((s, dir) => {
@@ -1179,7 +1179,7 @@ private[graft] object SparkEntryQueriesA {
           round(col("info._4").cast("double") / (col("w") * col("h")), 6).as("mean_px"),
           col("rinfo._4").as("r_pix_sum"),
           round(col("rinfo._4").cast("double") / 64.0, 6).as("r_mean_px")))
-        .sortByTruncated(Seq(col("id")))
+        .sortByStaged(Seq(col("id")))
     }),
 
     "q146_audio_decode" -> ((s, dir) => {
@@ -1206,7 +1206,7 @@ private[graft] object SparkEntryQueriesA {
           // mean over info._6 (total interleaved samples), not _1 (frames):
           // equal for this mono clip, but only _6 stays correct for stereo
           round(col("info._5").cast("double") / col("info._6"), 6).as("mean_abs")))
-        .sortByTruncated(Seq(col("id")))
+        .sortByStaged(Seq(col("id")))
     }),
 
     "q147_winsorize_approx" -> ((s, dir) =>
@@ -1257,7 +1257,7 @@ private[graft] object SparkEntryQueriesA {
           col("fr._3").cast("long").as("height"),
           col("fr._4").as("pix_sum"),
           round(col("fr._4").cast("double") / (col("w") * col("h")), 6).as("mean_px")))
-        .sortByTruncated(Seq(col("id"), col("frame_idx")))
+        .sortByStaged(Seq(col("id"), col("frame_idx")))
     }),
 
     "q150_bucketed_join" -> ((s, dir) => {
@@ -2425,7 +2425,7 @@ private[graft] object SparkEntryQueriesA {
         .selectCols(Seq(col("doc_id").as("id"),
           col("p._1").cast("long").as("pr"), col("p._2").cast("long").as("pc"),
           col("p._3").as("n_px"), col("p._4").as("px_sum")))
-        .sortByTruncated(Seq(col("id"), col("pr"), col("pc")))
+        .sortByStaged(Seq(col("id"), col("pr"), col("pc")))
     }),
 
     "q339_vad_segments" -> ((s, dir) => {

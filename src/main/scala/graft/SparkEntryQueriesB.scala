@@ -783,7 +783,7 @@ private[graft] object SparkEntryQueriesB {
       // (q76's codec) -> 16-dim ±1 sign projection with the sign matrix a
       // pure function of (i, j) — every output an exact integer, the
       // cheap pre-filter in front of exact re-rank. No shuffle at all.
-      // spread + truncated sort: the per-(row, j) aggregate lambda is
+      // spread + staged sort: the per-(row, j) aggregate lambda is
       // interpreted (HOF CodegenFallback) and the single-split scan ran it
       // on one core — twice, because the range sampler re-executes the
       // map pipeline (measured: 1.65 s + 1.28 s single-task stages)
@@ -793,7 +793,7 @@ private[graft] object SparkEntryQueriesB {
             .getField("q").as("codes"))))
       Similarity.jlProjectCodes(q, col("vec_id"), col("codes"), outDim = 16)
         .selectCols(Seq(col("id").as("vec_id"), col("j"), col("y")))
-        .sortByTruncated(Seq(col("vec_id"), col("j")))
+        .sortByStaged(Seq(col("vec_id"), col("j")))
     }),
 
     "q306_profile_drift" -> ((s, dir) => {
@@ -1691,7 +1691,7 @@ private[graft] object SparkEntryQueriesB {
           explode(Multimodal.whtBands(col("wav"))).as("b")))
         .selectCols(Seq(col("id"), col("b._1").cast("long").as("band"),
           col("b._2").as("c_abs_sum")))
-        .sortByTruncated(Seq(col("id"), col("band")))
+        .sortByStaged(Seq(col("id"), col("band")))
     }),
 
     "q256_video_motion" -> ((s, dir) => {
@@ -1716,7 +1716,7 @@ private[graft] object SparkEntryQueriesB {
           col("m._1").cast("long").as("to_frame"),
           col("m._2").as("sad"),
           (col("m._2") * lit(100L) >= lit(30L) * col("w") * col("h")).as("cut")))
-        .sortByTruncated(Seq(col("id"), col("to_frame")))
+        .sortByStaged(Seq(col("id"), col("to_frame")))
     }),
 
     "q255_drift_stream" -> ((s, dir) => {
@@ -1867,9 +1867,9 @@ private[graft] object SparkEntryQueriesB {
         .selectCols(Seq(col("id"), col("w._1").as("win"), col("w._2").as("n"),
           col("w._3").as("abs_sum"), col("w._4").as("energy"),
           (col("w._3") < lit(16384L) * col("w._2")).as("silence")))
-        // truncated sort: the range sampler otherwise re-runs the synth +
+        // staged sort: the range sampler otherwise re-runs the synth +
         // decode UDF pipeline (measured: 2x 1 s stages per execution)
-        .sortByTruncated(Seq(col("id"), col("win")))
+        .sortByStaged(Seq(col("id"), col("win")))
     }),
 
     "q243_benford_stream" -> ((s, dir) => {

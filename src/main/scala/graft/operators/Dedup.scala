@@ -587,9 +587,10 @@ object Dedup {
     val e = df.select(id.alias("id"), vec.alias("v"))
     // repartition the PROBE side: the nested-loop scoring is O(n^2) work
     // that otherwise runs fused into the input's split count (measured on
-    // q37: 2000 vectors scored on 1 task, twice — the range sampler
-    // re-runs the exchange-free pipeline); the broadcast side stays the
-    // raw scan. Unconditional rather than the `spread` partition probe:
+    // q37: 2000 vectors scored on 1 task); the broadcast side stays the
+    // raw scan. The join's output has no exchange above it, so a caller's
+    // total sort belongs in `sortByStaged` (q37): a plain `sortBy`'s range
+    // sampler would score every pair a second time. Unconditional rather than the `spread` partition probe:
     // the maxInputBytes guard above bounds this instrument's input to a
     // handful of splits, and spread's plan->RDD partition check costs
     // ~0.5 s of driver time per call (measured) — more than the exchange

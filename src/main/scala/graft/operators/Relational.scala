@@ -207,23 +207,26 @@ object Relational {
     /** `df/sort-by` — `src/main.rs:211-216,487`: default order. DataFusion's
       * default is ASC NULLS LAST; Spark's bare `.asc` is nulls-first, so we
       * must be explicit.
+      *
+      * A total sort range-partitions, and the range partitioner's sampling
+      * job runs the sort's input pipeline a second time up to its last
+      * exchange. Use [[sortByStaged]] instead when that input is a map
+      * pipeline with no exchange that costs more than its rows (a
+      * nested-loop join, codec or synth UDFs, explodes).
       */
     def sortBy(exprs: Seq[Column]): DataFrame = df.orderBy(exprs.map(_.asc_nulls_last): _*)
 
-    /** [[sortBy]] with lineage truncation before the sort — for results
-      * produced by an expensive unexchanged MAP pipeline (codec/synth
-      * UDFs, explodes). A total sort range-partitions, and the range
-      * partitioner's SAMPLING pass re-executes the sort's child pipeline
-      * end to end: an expensive UDF subtree runs twice per execution
-      * (measured q244: two identical 1 s decode stages back to back).
-      * A lazy localCheckpoint makes the sampling pass the one real
-      * computation (saved to executor blocks) and the shuffle a block
-      * read. Only worth it when the child pipeline costs more than
-      * materializing its rows — results are identical either way.
+    /** [[sortBy]] behind a hash exchange on the sort keys, so the input
+      * pipeline runs once: in the exchange's map stage. The range sampler
+      * then reads that shuffle's output instead of re-running the pipeline
+      * (measured q244: two identical 1 s decode stages back to back; q37:
+      * the cosine nested-loop join scored twice). No block outlives the
+      * query, and a lost executor's output is recomputed from lineage. The
+      * partition count is `defaultParallelism`, as in [[Relational.spreadBy]];
+      * results are identical to [[sortBy]]'s.
       */
-    def sortByTruncated(exprs: Seq[Column]): DataFrame =
-      Iterative.truncate(df, None, eager = false)
-        .orderBy(exprs.map(_.asc_nulls_last): _*)
+    def sortByStaged(exprs: Seq[Column]): DataFrame =
+      spreadBy(df, exprs: _*).orderBy(exprs.map(_.asc_nulls_last): _*)
 
     /** `df/limit` — `src/main.rs:204-209,486`: OFFSET skip, optional LIMIT
       * fetch (Spark >= 3.4 has a real `offset`).

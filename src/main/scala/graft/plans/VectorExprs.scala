@@ -154,22 +154,37 @@ object VectorExprs {
     case _          => throw new IllegalArgumentException(s"unsupported element type $et")
   }
 
-  abstract class VectorBinary extends BinaryExpression with CodegenFallback {
+  /** Arguments of the [[Kernels]] vector kernels. The kernels read elements
+    * as exactly 4-byte floats or 8-byte doubles; any other element type
+    * (reachable via the registered SQL functions, e.g. array<int>) would be
+    * reinterpreted as garbage, so it is rejected at analysis.
+    */
+  trait FloatArrays extends Expression {
+    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      def ok(dt: DataType): Boolean = dt match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _                                    => false
+      }
+      if (children.forall(c => ok(c.dataType)))
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      else
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires array<float> or array<double> arguments, " +
+            s"got ${children.map(_.dataType.simpleString).mkString(" and ")}")
+    }
+    /** True for float32 elements, false for float64. */
+    protected def isFloat(e: Expression): Boolean =
+      e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  }
+
+  abstract class VectorBinary extends BinaryExpression with FloatArrays with CodegenFallback {
     override def dataType: DataType = DoubleType
-    protected def elemType(e: Expression): DataType =
-      e.dataType.asInstanceOf[ArrayType].elementType
   }
 
   /** Dot product of two numeric arrays (float or double elements). */
   case class DotProduct(left: Expression, right: Expression) extends VectorBinary {
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-      val (ta, tb) = (elemType(left), elemType(right))
-      val n = math.min(a.numElements(), b.numElements())
-      var s = 0.0; var i = 0
-      while (i < n) { s += toDouble(a, i, ta) * toDouble(b, i, tb); i += 1 }
-      s
-    }
+    override def nullSafeEval(l: Any, r: Any): Any =
+      Kernels.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], isFloat(left), isFloat(right))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
       copy(left = l, right = r)
     override def prettyName: String = "dot_product"
@@ -180,26 +195,8 @@ object VectorExprs {
     * resolved at plan time) — this sits inside the join condition of the
     * pair queries, the hottest expression position in the engine.
     */
-  case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
+  case class CosineSim(left: Expression, right: Expression) extends BinaryExpression with FloatArrays {
     override def dataType: DataType = DoubleType
-    // Kernels.cosine reads elements as exactly 4-byte floats or 8-byte
-    // doubles; any other element type (reachable via the registered SQL
-    // function, e.g. array<int>) would be reinterpreted as garbage — reject
-    // it at analysis, matching toDouble's contract.
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      def ok(dt: DataType): Boolean = dt match {
-        case ArrayType(FloatType | DoubleType, _) => true
-        case _                                    => false
-      }
-      if (ok(left.dataType) && ok(right.dataType))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cosine_sim requires array<float> or array<double> arguments, " +
-            s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-    private def isFloat(e: Expression): Boolean =
-      e.dataType.asInstanceOf[ArrayType].elementType == FloatType
     override def nullSafeEval(l: Any, r: Any): Any =
       Kernels.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
         isFloat(left), isFloat(right))
@@ -222,34 +219,18 @@ object VectorExprs {
     * subtraction.
     */
   case class L2DistSq(left: Expression, right: Expression) extends VectorBinary {
-    override def nullSafeEval(l: Any, r: Any): Any = {
-      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-      val (ta, tb) = (elemType(left), elemType(right))
-      val n = math.min(a.numElements(), b.numElements())
-      var s = 0.0; var i = 0
-      while (i < n) {
-        val d = toDouble(a, i, ta) - toDouble(b, i, tb)
-        s += d * d
-        i += 1
-      }
-      s
-    }
+    override def nullSafeEval(l: Any, r: Any): Any =
+      Kernels.l2DistSq(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], isFloat(left), isFloat(right))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): L2DistSq =
       copy(left = l, right = r)
     override def prettyName: String = "l2_dist_sq"
   }
 
   /** L2 norm of a numeric array. */
-  case class L2Norm(child: Expression) extends UnaryExpression with CodegenFallback {
+  case class L2Norm(child: Expression) extends UnaryExpression with FloatArrays with CodegenFallback {
     override def dataType: DataType = DoubleType
-    override def nullSafeEval(input: Any): Any = {
-      val a = input.asInstanceOf[ArrayData]
-      val t = child.dataType.asInstanceOf[ArrayType].elementType
-      var s = 0.0; var i = 0
-      val n = a.numElements()
-      while (i < n) { val x = toDouble(a, i, t); s += x * x; i += 1 }
-      math.sqrt(s)
-    }
+    override def nullSafeEval(input: Any): Any =
+      Kernels.l2Norm(input.asInstanceOf[ArrayData], isFloat(child))
     override protected def withNewChildInternal(c: Expression): L2Norm = copy(child = c)
     override def prettyName: String = "l2_norm"
   }

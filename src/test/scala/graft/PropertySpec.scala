@@ -730,3 +730,51 @@ object RelationalProps extends Properties("relational") {
       }
     }
 }
+
+/** The vector kernels' direct-read path (an UnsafeArrayData read straight
+  * from memory) against the getter loop, bit for bit, on random arrays:
+  * float32/float64 on either side, unequal lengths, zero vectors, null
+  * and NaN elements. No Spark job, so the default 100 cases a property.
+  */
+object KernelProps extends Properties("kernels") {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+  import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+  import graft.plans.Kernels
+
+  private val elem: Gen[Option[Double]] = Gen.frequency(
+    16 -> Gen.choose(-4.0, 4.0).map(Some(_)), 2 -> Gen.const(Some(0.0)),
+    2 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN)))
+  private val vec: Gen[List[Option[Double]]] = Gen.choose(0, 40).flatMap(Gen.listOfN(_, elem))
+
+  private def generic(xs: List[Option[Double]], float: Boolean): ArrayData =
+    new GenericArrayData(xs.map {
+      case Some(x) => if (float) x.toFloat: Any else x: Any
+      case None    => null
+    }.toArray[Any])
+
+  private def unsafe(xs: List[Option[Double]], float: Boolean): UnsafeArrayData = {
+    val t: DataType = ArrayType(if (float) FloatType else DoubleType, containsNull = true)
+    UnsafeProjection.create(Array(t)).apply(InternalRow(generic(xs, float)))
+      .getArray(0).asInstanceOf[UnsafeArrayData]
+  }
+
+  /** `==` on the Double, with NaN equal to NaN. */
+  private def same(x: Double, y: Double): Boolean = (x.isNaN && y.isNaN) || x == y
+
+  property("cosine/dot/l2: the direct path equals the getter loop; generic arrays take the fallback") =
+    forAll(vec, vec, Gen.oneOf(true, false), Gen.oneOf(true, false)) { (xs, ys, af, bf) =>
+      val (ua, ub) = (unsafe(xs, af), unsafe(ys, bf))
+      val (ga, gb) = (generic(xs, af), generic(ys, bf))
+      val ref = Kernels.cosineByGetters(ua, ub, af, bf)
+      val zero = unsafe(xs.map(_ => Some(0.0)), af)
+      same(Kernels.cosine(ua, ub, af, bf), ref) :| "cosine direct" &&
+        same(Kernels.cosine(ga, gb, af, bf), ref) :| "cosine generic" &&
+        same(Kernels.cosine(ua, gb, af, bf), ref) :| "cosine mixed" &&
+        (Kernels.cosine(zero, ub, af, bf) == 0.0) :| "zero vector gives 0.0" &&
+        same(Kernels.dot(ua, ub, af, bf), Kernels.dot(ga, gb, af, bf)) :| "dot" &&
+        same(Kernels.l2DistSq(ua, ub, af, bf), Kernels.l2DistSq(ga, gb, af, bf)) :| "l2DistSq" &&
+        same(Kernels.l2Norm(ua, af), Kernels.l2Norm(ga, af)) :| "l2Norm"
+    }
+}

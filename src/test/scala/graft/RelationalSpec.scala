@@ -30,6 +30,24 @@ class RelationalSpec extends SparkSpec {
     assert(df.limitOffset(0, Some(2)).collect().map(_.getLong(0)).toSeq == Seq(0L, 1L))
   }
 
+  test("sortByStaged runs its input once, where sortBy's range sampler runs it twice") {
+    val n = 200
+    val calls = spark.sparkContext.longAccumulator("sortByStaged_calls")
+    val score = udf { (x: Long) => calls.add(1); x % 7 }
+    val df = spark.range(0, n, 1, 4)
+      .select($"id", when($"id" % 5 === 0, lit(null)).otherwise(score($"id")).as("k"))
+    val keys = Seq($"k", $"id")
+    val staged = df.sortByStaged(keys).collect().map(r => (Option(r.get(1)), r.getLong(0))).toSeq
+    assert(calls.value == n - n / 5)
+    calls.reset()
+    val plain = df.sortBy(keys).collect().map(r => (Option(r.get(1)), r.getLong(0))).toSeq
+    // why the helper exists: the sampling job re-runs the whole input
+    assert(calls.value == 2 * (n - n / 5))
+    assert(staged == plain)
+    assert(staged.dropWhile(_._1.isDefined).forall(_._1.isEmpty), "nulls last")
+    assert(staged.count(_._1.isEmpty) == n / 5)
+  }
+
   test("distinctOn: first row per group under explicit order") {
     val df = Seq(("g1", 1, 10), ("g1", 2, 5), ("g2", 3, 7)).toDF("g", "id", "ts")
     val out = df.distinctOn(Seq($"g"), Seq($"g", $"id"), Seq($"ts".asc, $"id".asc))

@@ -443,6 +443,12 @@ class SimilaritySpec extends SparkSpec {
       "SELECT cosine_sim(a, b) AS c, dot_product(a, b) AS d, l2_norm(a) AS n FROM vecs")
       .collect()(0)
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 1.0 && r.getDouble(2) == 1.0)
+    // the kernels read 4- or 8-byte float elements from memory: any other
+    // element type fails analysis instead of being reinterpreted
+    Seq("cosine_sim(x, x)", "dot_product(x, x)", "l2_dist_sq(x, x)", "l2_norm(x)").foreach { f =>
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $f FROM (SELECT array(1, 2) AS x)").collect())
+    }
   }
   test("nswBuildGraph at nprobe = nlist equals brute-force kNN of the corpus") {
     // probing every cell removes the approximation: each node's out-edges

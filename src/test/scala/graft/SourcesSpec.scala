@@ -299,4 +299,11 @@ class SourcesSpec extends SparkSpec {
       Engine.toArrowBatches(empty), empty.schema)
     assert(eback.count() == 0L && eback.schema == df.schema)
   }
+
+  test("SparkEntry.scratchRoot defaults to target/graft-scratch under the working directory") {
+    val overridden = sys.props.get("graft.scratch").orElse(sys.env.get("SPARK_GRAFT_SCRATCH"))
+    val expected = overridden.getOrElse(
+      Paths.get(sys.props("user.dir"), "target", "graft-scratch").toString)
+    assert(SparkEntry.scratchRoot == expected)
+  }
 }
