@@ -590,11 +590,11 @@ object Dedup {
     // q37: 2000 vectors scored on 1 task); the broadcast side stays the
     // raw scan. The join's output has no exchange above it, so a caller's
     // total sort belongs in `sortByStaged` (q37): a plain `sortBy`'s range
-    // sampler would score every pair a second time. Unconditional rather than the `spread` partition probe:
-    // the maxInputBytes guard above bounds this instrument's input to a
-    // handful of splits, and spread's plan->RDD partition check costs
-    // ~0.5 s of driver time per call (measured) — more than the exchange
-    // it would sometimes skip.
+    // sampler would score every pair a second time. Unconditional rather
+    // than the `spread` partition probe: the maxInputBytes guard above
+    // bounds this instrument's input to a handful of splits, and spread's
+    // plan->RDD partition check costs ~0.5 s of driver time per call
+    // (measured) — more than the exchange it would sometimes skip.
     val a = e.repartition(e.sparkSession.sparkContext.defaultParallelism)
       .alias("a")
     val b = e.alias("b")

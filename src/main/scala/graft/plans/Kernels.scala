@@ -79,111 +79,46 @@ object Kernels {
     ArrayData.toArrayData(buckets)
   }
 
-  // ---- vector kernels ----------------------------------------------------
-  // Each takes float32 (`xFloat`) or float64 element arrays and widens every
-  // element to double exactly. When every argument is an UnsafeArrayData
-  // (any array read from a row) its elements are read straight from memory
-  // with `at`; any other ArrayData goes through its getters. Both paths run
-  // the same floating-point operations in the same index order, so their
-  // results are bit-identical (PropertySpec's `kernels` property pins it).
-
-  /** Byte offset of element 0 of `u`'s values, past the length word and the
-    * null bitmap.
-    */
-  private def valuesOffset(u: UnsafeArrayData): Long =
-    u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
-
-  /** Element `i` of the unsafe array whose values start at `off` in `obj`,
-    * float32 when `float`, widened to double. A null element reads 0.0, as
-    * through the getters: the array writer zeroes a null's slot.
-    */
-  @inline private def at(obj: AnyRef, off: Long, float: Boolean, i: Int): Double =
-    if (float) Platform.getFloat(obj, off + 4L * i).toDouble
-    else Platform.getDouble(obj, off + 8L * i)
-
-  /** Element `i` of any ArrayData through its getters (a null unboxes to 0.0). */
-  @inline private def at(a: ArrayData, float: Boolean, i: Int): Double =
-    if (float) a.getFloat(i).toDouble else a.getDouble(i)
-
   /** [[VectorExprs.CosineSim]] kernel; element types resolved at codegen
     * time into the two boolean flags (true = float32 elements). 0.0 when
-    * either norm is 0.
+    * either norm is 0. Elements are read straight from memory (element `i`
+    * at the values offset + `i * width`), widened to double exactly, in
+    * index order: the same floating-point operations as a getter loop, so
+    * the same bits (PropertySpec's `kernels` property pins it).
     */
-  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = (a, b) match {
-    case (ua: UnsafeArrayData, ub: UnsafeArrayData) =>
-      val n = math.min(ua.numElements(), ub.numElements())
-      val oa = ua.getBaseObject; val pa = valuesOffset(ua)
-      val ob = ub.getBaseObject; val pb = valuesOffset(ub)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = at(oa, pa, aFloat, i)
-        val y = at(ob, pb, bFloat, i)
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    case _ => cosineByGetters(a, b, aFloat, bFloat)
-  }
-
-  /** [[cosine]] through the getters: the path of any array that is not an
-    * UnsafeArrayData, and the reference the direct path must equal.
-    */
-  private[graft] def cosineByGetters(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
+    val oa = values(a, aFloat); val pa = valuesOffset(a, aFloat)
+    val ob = values(b, bFloat); val pb = valuesOffset(b, bFloat)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
-      val x = at(a, aFloat, i)
-      val y = at(b, bFloat, i)
+      val x = if (aFloat) Platform.getFloat(oa, pa + 4L * i).toDouble
+              else Platform.getDouble(oa, pa + 8L * i)
+      val y = if (bFloat) Platform.getFloat(ob, pb + 4L * i).toDouble
+              else Platform.getDouble(ob, pb + 8L * i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
 
-  /** [[VectorExprs.DotProduct]] kernel: `sum x_i * y_i` in index order. */
-  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    (a, b) match {
-      case (ua: UnsafeArrayData, ub: UnsafeArrayData) =>
-        val oa = ua.getBaseObject; val pa = valuesOffset(ua)
-        val ob = ub.getBaseObject; val pb = valuesOffset(ub)
-        while (i < n) { s += at(oa, pa, aFloat, i) * at(ob, pb, bFloat, i); i += 1 }
-      case _ =>
-        while (i < n) { s += at(a, aFloat, i) * at(b, bFloat, i); i += 1 }
-    }
-    s
-  }
-
-  /** [[VectorExprs.L2DistSq]] kernel: `s += (x_i - y_i)^2`, strictly left to
-    * right.
+  /** The object holding `a`'s elements: an UnsafeArrayData's own memory
+    * (any array read from a row; the array writer zeroes a null element's
+    * slot), otherwise a primitive copy (a null element becomes 0.0, as
+    * through the getters).
     */
-  def l2DistSq(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    (a, b) match {
-      case (ua: UnsafeArrayData, ub: UnsafeArrayData) =>
-        val oa = ua.getBaseObject; val pa = valuesOffset(ua)
-        val ob = ub.getBaseObject; val pb = valuesOffset(ub)
-        while (i < n) { val d = at(oa, pa, aFloat, i) - at(ob, pb, bFloat, i); s += d * d; i += 1 }
-      case _ =>
-        while (i < n) { val d = at(a, aFloat, i) - at(b, bFloat, i); s += d * d; i += 1 }
-    }
-    s
+  private def values(a: ArrayData, float: Boolean): AnyRef = a match {
+    case u: UnsafeArrayData => u.getBaseObject
+    case _                  => if (float) a.toFloatArray() else a.toDoubleArray()
   }
 
-  /** [[VectorExprs.L2Norm]] kernel: `sqrt(sum x_i^2)` in index order. */
-  def l2Norm(a: ArrayData, float: Boolean): Double = {
-    val n = a.numElements()
-    var s = 0.0; var i = 0
-    a match {
-      case u: UnsafeArrayData =>
-        val o = u.getBaseObject; val p = valuesOffset(u)
-        while (i < n) { val x = at(o, p, float, i); s += x * x; i += 1 }
-      case _ =>
-        while (i < n) { val x = at(a, float, i); s += x * x; i += 1 }
-    }
-    math.sqrt(s)
+  /** Byte offset of element 0 in [[values]]: past an UnsafeArrayData's
+    * length word and null bitmap, or a primitive array's header.
+    */
+  private def valuesOffset(a: ArrayData, float: Boolean): Long = a match {
+    case u: UnsafeArrayData =>
+      u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
+    case _ => if (float) Platform.FLOAT_ARRAY_OFFSET.toLong else Platform.DOUBLE_ARRAY_OFFSET.toLong
   }
 
   /** [[VectorExprs.HilbertIndex]] kernel: classic xy2d recurrence. Inputs

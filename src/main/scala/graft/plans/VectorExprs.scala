@@ -154,10 +154,11 @@ object VectorExprs {
     case _          => throw new IllegalArgumentException(s"unsupported element type $et")
   }
 
-  /** Arguments of the [[Kernels]] vector kernels. The kernels read elements
-    * as exactly 4-byte floats or 8-byte doubles; any other element type
-    * (reachable via the registered SQL functions, e.g. array<int>) would be
-    * reinterpreted as garbage, so it is rejected at analysis.
+  /** Arguments of the vector expressions: array<float> or array<double>.
+    * Any other element type is reachable via the registered SQL functions
+    * (e.g. array<int>); [[Kernels.cosine]] would reinterpret its bytes as
+    * garbage and `toDouble` throws only at run time, so it is rejected at
+    * analysis.
     */
   trait FloatArrays extends Expression {
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -179,12 +180,20 @@ object VectorExprs {
 
   abstract class VectorBinary extends BinaryExpression with FloatArrays with CodegenFallback {
     override def dataType: DataType = DoubleType
+    protected def elemType(e: Expression): DataType =
+      e.dataType.asInstanceOf[ArrayType].elementType
   }
 
   /** Dot product of two numeric arrays (float or double elements). */
   case class DotProduct(left: Expression, right: Expression) extends VectorBinary {
-    override def nullSafeEval(l: Any, r: Any): Any =
-      Kernels.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], isFloat(left), isFloat(right))
+    override def nullSafeEval(l: Any, r: Any): Any = {
+      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+      val (ta, tb) = (elemType(left), elemType(right))
+      val n = math.min(a.numElements(), b.numElements())
+      var s = 0.0; var i = 0
+      while (i < n) { s += toDouble(a, i, ta) * toDouble(b, i, tb); i += 1 }
+      s
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
       copy(left = l, right = r)
     override def prettyName: String = "dot_product"
@@ -219,8 +228,18 @@ object VectorExprs {
     * subtraction.
     */
   case class L2DistSq(left: Expression, right: Expression) extends VectorBinary {
-    override def nullSafeEval(l: Any, r: Any): Any =
-      Kernels.l2DistSq(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], isFloat(left), isFloat(right))
+    override def nullSafeEval(l: Any, r: Any): Any = {
+      val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
+      val (ta, tb) = (elemType(left), elemType(right))
+      val n = math.min(a.numElements(), b.numElements())
+      var s = 0.0; var i = 0
+      while (i < n) {
+        val d = toDouble(a, i, ta) - toDouble(b, i, tb)
+        s += d * d
+        i += 1
+      }
+      s
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): L2DistSq =
       copy(left = l, right = r)
     override def prettyName: String = "l2_dist_sq"
@@ -229,8 +248,14 @@ object VectorExprs {
   /** L2 norm of a numeric array. */
   case class L2Norm(child: Expression) extends UnaryExpression with FloatArrays with CodegenFallback {
     override def dataType: DataType = DoubleType
-    override def nullSafeEval(input: Any): Any =
-      Kernels.l2Norm(input.asInstanceOf[ArrayData], isFloat(child))
+    override def nullSafeEval(input: Any): Any = {
+      val a = input.asInstanceOf[ArrayData]
+      val t = child.dataType.asInstanceOf[ArrayType].elementType
+      var s = 0.0; var i = 0
+      val n = a.numElements()
+      while (i < n) { val x = toDouble(a, i, t); s += x * x; i += 1 }
+      math.sqrt(s)
+    }
     override protected def withNewChildInternal(c: Expression): L2Norm = copy(child = c)
     override def prettyName: String = "l2_norm"
   }

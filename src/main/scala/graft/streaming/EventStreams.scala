@@ -406,9 +406,9 @@ object EventStreams {
     * landing zones ([[stagedOnce]]), streaming checkpoints and parquet
     * drain stores ([[drainStream]]). It sits below
     * [[graft.SparkEntry.scratchRoot]] (tmpfs when the bench redirects
-    * `graft.scratch`, the repo target dir otherwise), never under
-    * `java.io.tmpdir`, and a shutdown hook deletes it, so nothing the
-    * harness writes outlives the JVM.
+    * `graft.scratch`, target/graft-scratch under the working directory
+    * otherwise), never under `java.io.tmpdir`, and a shutdown hook deletes
+    * it, so nothing the harness writes outlives the JVM.
     *
     * Checkpoints are named, never left to Spark: an unnamed streaming
     * query gets a temporary checkpoint under `java.io.tmpdir` — a DISK

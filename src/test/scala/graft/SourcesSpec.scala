@@ -301,9 +301,14 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("SparkEntry.scratchRoot defaults to target/graft-scratch under the working directory") {
-    val overridden = sys.props.get("graft.scratch").orElse(sys.env.get("SPARK_GRAFT_SCRATCH"))
-    val expected = overridden.getOrElse(
-      Paths.get(sys.props("user.dir"), "target", "graft-scratch").toString)
-    assert(SparkEntry.scratchRoot == expected)
+    assume(sys.props.get("graft.scratch").isEmpty && sys.env.get("SPARK_GRAFT_SCRATCH").isEmpty,
+      "a scratch root override is set")
+    // another checkout: the default follows user.dir, not a fixed path
+    val cwd = tempDir("checkout")
+    val saved = sys.props("user.dir")
+    try {
+      sys.props("user.dir") = cwd
+      assert(SparkEntry.scratchRoot == Paths.get(cwd, "target", "graft-scratch").toString)
+    } finally sys.props("user.dir") = saved
   }
 }
